@@ -29,9 +29,6 @@ from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 FIXTURE_DIR = os.path.join(REPO, "tests", "data")
-# The reference's own replication fixture (25 changesets) — read from its
-# original path rather than vendored (VERDICT r1 copy-paste adjudication).
-REPLICATION_FIXTURE = "/root/reference/tests/245.osm.gz"
 
 import sys
 
@@ -41,6 +38,7 @@ if REPO not in sys.path:
 from osmcha_spark import oracle as OQ
 from osmcha_spark import synth
 from osmcha_spark.config import RulesConfig
+from osmcha_spark.fixtures import replication_fixture
 from osmcha_spark.geo.cells import cell_col, cell_sql
 from osmcha_spark.operators.aoi import filter_by_aoi
 from osmcha_spark.operators.dedup import (
@@ -1501,7 +1499,8 @@ FROM read_parquet('{path}')
 
 def q35_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming replication ingest (SURVEY §2.8): the
-    reference's own 245.osm.gz consumed as a micro-batch stream
+    reference fixture's 25 changesets (tests/data/245.osm.gz, generated
+    from the transcription) consumed as a micro-batch stream
     (AvailableNow, checkpointed) → parsed changeset rows. The oracle is the
     re-encoded fixture parquet of the same file — streamed parse must equal
     the committed rows byte-for-byte."""
@@ -1524,7 +1523,8 @@ def q35_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(work, "out")
     os.makedirs(in_dir)
     shutil.copy(
-        REPLICATION_FIXTURE, os.path.join(in_dir, "000001.osm.gz")
+        replication_fixture(FIXTURE_DIR),
+        os.path.join(in_dir, "000001.osm.gz"),
     )
     cs = read_replication_stream(spark, in_dir)
     q = run_replication_stream(cs, out_dir, os.path.join(work, "ckpt"))
@@ -2427,7 +2427,8 @@ def q54_user_stats_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = _work_dir("q54")
     in_dir = os.path.join(work, "in")
     os.makedirs(in_dir)
-    shutil.copy(REPLICATION_FIXTURE, os.path.join(in_dir, "000001.osm.gz"))
+    fixture = replication_fixture(FIXTURE_DIR)
+    shutil.copy(fixture, os.path.join(in_dir, "000001.osm.gz"))
 
     cs_fix = spark.read.parquet(
         os.path.join(FIXTURE_DIR, "changesets.parquet")
@@ -2443,7 +2444,7 @@ def q54_user_stats_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     repl_ids = {
         r["id"]
-        for r in read_replication(spark, REPLICATION_FIXTURE)
+        for r in read_replication(spark, fixture)
         .select("id")
         .collect()
     }

@@ -15,7 +15,9 @@ tests feed it:
   edge cases.
 
 Written once to ``tests/data/``; the DuckDB oracle reads the same files via
-``read_parquet``.
+``read_parquet``. The 25 changesets are also serialized back to the
+replication wire format as ``tests/data/245.osm.gz`` (generated, never
+vendored), the input of every replication-source and streaming test.
 """
 
 from __future__ import annotations
@@ -399,6 +401,23 @@ def write_fixtures(data_dir: str) -> None:
     )
 
     write_multimodal_fixtures(data_dir)
+    write_replication_fixture(data_dir)
+
+
+REPLICATION_FIXTURE = "245.osm.gz"
+
+
+def write_replication_fixture(data_dir: str) -> None:
+    """Serialize the transcribed 25 rows of 245.osm.gz with
+    ``write_replication_gz`` (tmp + rename, so a concurrent reader never
+    sees half a file)."""
+    from osmcha_spark.sources.replication import write_replication_gz
+
+    os.makedirs(data_dir, exist_ok=True)
+    path = os.path.join(data_dir, REPLICATION_FIXTURE)
+    tmp = f"{path}.tmp-{os.getpid()}"
+    write_replication_gz(_fixture_245(), tmp)
+    os.replace(tmp, path)
 
 
 def write_multimodal_fixtures(data_dir: str) -> None:
@@ -485,7 +504,14 @@ def ensure_fixtures(data_dir: str | None = None) -> str:
     marker = os.path.join(data_dir, "changesets.parquet")
     if not os.path.exists(marker):
         write_fixtures(data_dir)
+    elif not os.path.exists(os.path.join(data_dir, REPLICATION_FIXTURE)):
+        write_replication_fixture(data_dir)
     return data_dir
+
+
+def replication_fixture(data_dir: str | None = None) -> str:
+    """Path of the generated ``245.osm.gz``, written on first use."""
+    return os.path.join(ensure_fixtures(data_dir), REPLICATION_FIXTURE)
 
 
 if __name__ == "__main__":

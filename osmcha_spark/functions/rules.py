@@ -50,7 +50,7 @@ def warning_reason_for_tag(tag: Column) -> Column:
     for pref, reason in reversed(WARNING_PREFIX):
         this = F.when(tag.startswith(pref), F.lit(reason))
         prefix_hit = this.otherwise(prefix_hit) if prefix_hit is not None else this
-    return F.coalesce(exact.getItem(tag), prefix_hit)
+    return F.coalesce(exact[tag], prefix_hit)
 
 
 def warning_reasons_col(warning_tags: Column) -> Column:

@@ -487,9 +487,12 @@ def join_mv_sync(
 
     fronts = []
     for n in T.list_tags(mv_path):
-        if n.startswith("sync-"):
-            a, b = n[5:].split("-")
-            fronts.append((int(a), int(b)))
+        # only sync-<a_sid>-<b_sid> is this view's frontier; a foreign
+        # sync-* tag (mv_sync's single-part sync-<sid>) is skipped
+        parts = n.split("-")
+        if (len(parts) == 3 and parts[0] == "sync"
+                and parts[1].isdigit() and parts[2].isdigit()):
+            fronts.append((int(parts[1]), int(parts[2])))
     if not fronts:
         raise ValueError(f"{mv_path} has no sync-*-* frontier tag: not "
                          "a join_mv_sync-maintained view")

@@ -655,7 +655,8 @@ def _find_commit(path: str, commit_id: str) -> int | None:
 def _write_files(df: DataFrame, path: str,
                  partition_col: str | None,
                  bloom_cols: list[str] | None = None,
-                 transform: dict | None = None) -> list[dict]:
+                 transform: dict | None = None,
+                 skip_empty: bool = False) -> list[dict] | None:
     """Step (1): write df as immutable files under data/, grouped by
     partition value, and return their manifest entries. ONE Spark job:
     partitionBy on a DUPLICATE column so the partition column stays a
@@ -664,7 +665,12 @@ def _write_files(df: DataFrame, path: str,
     hidden-partition ``transform`` the ``__pv`` column is DERIVED from
     the transform's source column instead (and only the source column
     lands in the data files — the derived value lives in the manifest
-    alone, Iceberg's hidden-partitioning contract)."""
+    alone, Iceberg's hidden-partitioning contract).
+
+    ``skip_empty`` returns None instead of entries, deleting the
+    written files, when their footers hold zero rows in total.
+    Emptiness is read from the footers the entries need anyway, so the
+    caller never runs the upstream plan a second time to probe it."""
     import pyarrow.parquet as _pq
     from urllib.parse import unquote as _unquote
 
@@ -718,6 +724,10 @@ def _write_files(df: DataFrame, path: str,
                         for c in present
                     }
             entries.append(entry)
+    if skip_empty and not sum(e["rows"] for e in entries):
+        for e in entries:
+            os.remove(os.path.join(_data_dir(path), e["name"]))
+        entries = None
     _shutil.rmtree(staging, ignore_errors=True)
     return entries
 
@@ -778,7 +788,8 @@ def snapshot_create(df: DataFrame, path: str,
                     commit_id: str | None = None,
                     bloom_cols: list[str] | None = None,
                     partition_transform: tuple | None = None,
-                    checks: list[str] | None = None) -> int:
+                    checks: list[str] | None = None,
+                    *, _skip_empty: bool = False) -> int | None:
     """Create the table: snapshot 0 holds df's rows. ``partition_col``
     (optional) sets the copy-on-write granularity for later upserts and
     the manifest's file-pruning key. ``bloom_cols`` (optional, a TABLE
@@ -806,17 +817,29 @@ def snapshot_create(df: DataFrame, path: str,
     violating batch refuses atomically with per-check violation counts
     before any file lands, NULL results counting as violations
     (Delta/ANSI CHECK semantics). Table-scoped, set once at create
-    (see :func:`_validate_checks` for the V1 scope note)."""
+    (see :func:`_validate_checks` for the V1 scope note): the sidecar
+    is written only after the commit lands, so a refused or crashed
+    create leaves no constraint set behind, and a ``commit_id`` replay
+    declaring different checks than the table's raises instead of
+    rewriting them.
+
+    ``_skip_empty`` (the streaming sink's) commits nothing and returns
+    None when df turns out to have no rows."""
     os.makedirs(path, exist_ok=True)
-    if checks:
-        _validate_checks(df, list(checks), "snapshot_create")
-        _set_checks(path, list(checks))
+    checks = list(checks or [])
     if commit_id is not None:
         done = _find_commit(path, commit_id)
         if done is not None:
+            created_with = table_checks(path)
+            if checks != created_with:
+                raise ValueError(
+                    f"snapshot_create replay of {commit_id!r} declares "
+                    f"checks {checks} but the table was created with "
+                    f"{created_with}; checks are set once, at create")
             if current_snapshot(path) != done:
                 _point_current(path, done)
             return done
+    _validate_checks(df, checks, "snapshot_create")
     tr = None
     if partition_transform is not None:
         if partition_col is not None:
@@ -838,10 +861,15 @@ def snapshot_create(df: DataFrame, path: str,
                 "engine-stable)")
         partition_col = _transform_name(tr)
     files = _write_files(df, path, partition_col, bloom_cols,
-                         transform=tr)
-    return _commit(path, files, partition_col, None, commit_id,
-                   schema=_schema_dict(df), bloom_cols=bloom_cols,
-                   transform=tr)
+                         transform=tr, skip_empty=_skip_empty)
+    if files is None:
+        return None
+    sid = _commit(path, files, partition_col, None, commit_id,
+                  schema=_schema_dict(df), bloom_cols=bloom_cols,
+                  transform=tr)
+    if checks:
+        _set_checks(path, checks)
+    return sid
 
 
 def snapshot_files(path: str, snapshot: int | None = None,
@@ -1514,7 +1542,8 @@ def snapshot_changes(spark: SparkSession, path: str,
 def snapshot_append(df: DataFrame, path: str,
                     commit_id: str | None = None,
                     publish: bool = True,
-                    branch: str | None = None) -> int:
+                    branch: str | None = None,
+                    *, _skip_empty: bool = False) -> int | None:
     """Append-only commit: write df's rows as new files and reference
     them ALONGSIDE every current file — zero reads, zero rewrites, the
     log/fact-table ingest op (a minutely micro-batch costs exactly its
@@ -1532,7 +1561,11 @@ def snapshot_append(df: DataFrame, path: str,
     the parent is the branch head, the branch pointer advances, and
     main never moves — multi-commit WAP. Replays (``commit_id``)
     repoint the branch, not main. Publish the run with
-    :func:`snapshot_fast_forward`."""
+    :func:`snapshot_fast_forward`.
+
+    An empty df still commits (a frontier may need to move);
+    ``_skip_empty`` (the streaming sink's) commits nothing and returns
+    None instead."""
     if branch is not None:
         base = resolve_branch(path, branch)
         if commit_id is not None:
@@ -1547,7 +1580,10 @@ def snapshot_append(df: DataFrame, path: str,
         bloom_cols = man.get("bloom_cols")
         new_files = _write_files(df, path, man["partition_col"],
                                  bloom_cols,
-                                 transform=man.get("partition_transform"))
+                                 transform=man.get("partition_transform"),
+                                 skip_empty=_skip_empty)
+        if new_files is None:
+            return None
         sid = _commit(path, man["files"] + new_files,
                       man["partition_col"], base, commit_id,
                       schema=schema, bloom_cols=bloom_cols,
@@ -1569,7 +1605,10 @@ def snapshot_append(df: DataFrame, path: str,
     schema = _merged_schema(man.get("schema"), df)
     bloom_cols = man.get("bloom_cols")
     new_files = _write_files(df, path, man["partition_col"], bloom_cols,
-                             transform=man.get("partition_transform"))
+                             transform=man.get("partition_transform"),
+                             skip_empty=_skip_empty)
+    if new_files is None:
+        return None
     return _commit(path, man["files"] + new_files, man["partition_col"],
                    cur, commit_id, schema=schema, bloom_cols=bloom_cols,
                    deletes=man.get("deletes"), publish=publish,

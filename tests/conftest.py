@@ -5,7 +5,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from osmcha_spark.fixtures import ensure_fixtures  # noqa: E402
+from osmcha_spark.fixtures import (  # noqa: E402
+    ensure_fixtures,
+    replication_fixture,
+)
 
 DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
@@ -13,6 +16,12 @@ DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 @pytest.fixture(scope="session")
 def data_dir() -> str:
     return ensure_fixtures(DATA_DIR)
+
+
+@pytest.fixture(scope="session")
+def replication_gz(data_dir) -> str:
+    """The generated 245.osm.gz replication file (25 changesets)."""
+    return replication_fixture(data_dir)
 
 
 @pytest.fixture(scope="session")

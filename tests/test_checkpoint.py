@@ -174,7 +174,8 @@ def test_spark_submit_dedup_job_runs_and_resumes(tmp_path):
                                "kept_canonical")}
 
 
-def test_spark_submit_incremental_merge_bounded_rewrite(tmp_path, spark):
+def test_spark_submit_incremental_merge_bounded_rewrite(
+        tmp_path, spark, replication_gz):
     """Deployment path for the minutely-replication merge
     (tools/job_incremental_pipeline.py): submit #1 bootstraps the
     bucket-partitioned verdict snapshot from the reference replication
@@ -220,7 +221,7 @@ def test_spark_submit_incremental_merge_bounded_rewrite(tmp_path, spark):
                 if ln.startswith("JOB_RESULT ")][-1]
         return json.loads(line[len("JOB_RESULT "):])
 
-    r1 = submit("/root/reference/tests/245.osm.gz")
+    r1 = submit(replication_gz)
     assert r1["bootstrap"] and r1["snapshot_rows"] == 25
 
     # craft the update batch: changeset 31982803 re-fetched with a bumped
@@ -232,9 +233,7 @@ def test_spark_submit_incremental_merge_bounded_rewrite(tmp_path, spark):
 
     row = [
         r.asDict()
-        for r in read_replication(
-            spark, "/root/reference/tests/245.osm.gz"
-        ).collect()
+        for r in read_replication(spark, replication_gz).collect()
         if r["id"] == 31982803
     ][0]
     row["comments_count"] = "99"

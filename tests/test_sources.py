@@ -16,16 +16,15 @@ from osmcha_spark.sources.replication import (
     read_replication_robust,
 )
 
-GOOD = "/root/reference/tests/245.osm.gz"
-
 
 @pytest.fixture()
-def mixed_dir(tmp_path):
+def mixed_dir(tmp_path, replication_gz):
     d = tmp_path / "repl"
     d.mkdir()
-    shutil.copy(GOOD, d / "000.osm.gz")
+    shutil.copy(replication_gz, d / "000.osm.gz")
     # truncated gzip stream
-    (d / "001.osm.gz").write_bytes(open(GOOD, "rb").read()[:200])
+    with open(replication_gz, "rb") as fh:
+        (d / "001.osm.gz").write_bytes(fh.read()[:200])
     # valid gzip of malformed XML
     (d / "002.osm.gz").write_bytes(gzip.compress(b"<osm><changeset"))
     return str(d)
@@ -43,13 +42,13 @@ def test_strict_scan_fails_on_corrupt_file(spark, mixed_dir):
         read_replication(spark, mixed_dir).count()
 
 
-def test_robust_scan_quarantines_per_file(spark, mixed_dir):
+def test_robust_scan_quarantines_per_file(spark, mixed_dir, replication_gz):
     robust = read_replication_robust(spark, mixed_dir)
     good = robust.where(F.col("parse_error").isNull())
     bad = robust.where(F.col("parse_error").isNotNull()).collect()
 
     # good rows == the strict scan of only the parseable file
-    strict = read_replication(spark, GOOD)
+    strict = read_replication(spark, replication_gz)
     got = {
         (r.id, r.user, r.min_lon, tuple(sorted((r.tags or {}).items())))
         for r in good.collect()
@@ -73,3 +72,14 @@ def test_robust_scan_quarantines_per_file(spark, mixed_dir):
         or "error" in by_file["001.osm.gz"].parse_error
     )
     assert "ParseError" in by_file["002.osm.gz"].parse_error
+
+
+def test_generated_fixture_matches_transcription(spark, replication_gz):
+    """The generated 245.osm.gz reads back as the transcribed rows, row
+    for row and in file order: every attribute, the float bbox exactly,
+    and the whole tags map."""
+    from osmcha_spark.fixtures import _fixture_245
+
+    got = [r.asDict()
+           for r in read_replication(spark, replication_gz).collect()]
+    assert got == _fixture_245()

@@ -12,7 +12,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-REF_GZ = "/root/reference/tests/245.osm.gz"
 
 
 def _drain(q):
@@ -26,14 +25,14 @@ def stream_dirs(tmp_path):
     return str(in_dir), str(tmp_path / "out"), str(tmp_path / "ckpt")
 
 
-def test_stream_consumes_each_file_once(spark, stream_dirs):
+def test_stream_consumes_each_file_once(spark, stream_dirs, replication_gz):
     from osmcha_spark.streaming import (
         read_replication_stream,
         run_replication_stream,
     )
 
     in_dir, out_dir, ckpt = stream_dirs
-    shutil.copy(REF_GZ, os.path.join(in_dir, "000001.osm.gz"))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000001.osm.gz"))
 
     def run_once():
         cs = read_replication_stream(spark, in_dir)
@@ -47,12 +46,12 @@ def test_stream_consumes_each_file_once(spark, stream_dirs):
     assert spark.read.parquet(out_dir).count() == 25
 
     # New replication file arrives → exactly its rows are appended.
-    shutil.copy(REF_GZ, os.path.join(in_dir, "000002.osm.gz"))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000002.osm.gz"))
     run_once()
     assert spark.read.parquet(out_dir).count() == 50
 
 
-def test_stream_batch_dedup_on_id(spark, stream_dirs):
+def test_stream_batch_dedup_on_id(spark, stream_dirs, replication_gz):
     from osmcha_spark.streaming import (
         read_replication_stream,
         run_replication_stream,
@@ -61,8 +60,8 @@ def test_stream_batch_dedup_on_id(spark, stream_dirs):
     in_dir, out_dir, ckpt = stream_dirs
     # Two copies of the same minute in ONE micro-batch → replayed ids
     # dropped within the batch.
-    shutil.copy(REF_GZ, os.path.join(in_dir, "000001.osm.gz"))
-    shutil.copy(REF_GZ, os.path.join(in_dir, "000002.osm.gz"))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000001.osm.gz"))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000002.osm.gz"))
     cs = read_replication_stream(spark, in_dir)
     _drain(run_replication_stream(cs, out_dir, ckpt))
     out = spark.read.parquet(out_dir)
@@ -70,7 +69,8 @@ def test_stream_batch_dedup_on_id(spark, stream_dirs):
     assert out.select("id").distinct().count() == 25
 
 
-def test_streamed_analysis_equals_batch(spark, stream_dirs, tables):
+def test_streamed_analysis_equals_batch(
+        spark, stream_dirs, tables, replication_gz):
     from osmcha_spark.plans.analyse import action_counts, analyse
     from osmcha_spark.sources.replication import read_replication
     from osmcha_spark.streaming import (
@@ -80,7 +80,7 @@ def test_streamed_analysis_equals_batch(spark, stream_dirs, tables):
     )
 
     in_dir, out_dir, ckpt = stream_dirs
-    shutil.copy(REF_GZ, os.path.join(in_dir, "000001.osm.gz"))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000001.osm.gz"))
 
     counts = action_counts(tables["actions"])
     stream = analysed_stream(
@@ -97,7 +97,7 @@ def test_streamed_analysis_equals_batch(spark, stream_dirs, tables):
     want = {
         (r.id, r.is_suspect, tuple(sorted(r.suspicion_reasons)))
         for r in analyse(
-            read_replication(spark, REF_GZ), counts, tables["users"]
+            read_replication(spark, replication_gz), counts, tables["users"]
         )
         .select("id", "is_suspect", "suspicion_reasons")
         .collect()
@@ -105,7 +105,7 @@ def test_streamed_analysis_equals_batch(spark, stream_dirs, tables):
     assert got == want and len(got) == 25
 
 
-def test_fetch_replication_file_url(tmp_path, spark):
+def test_fetch_replication_file_url(tmp_path, spark, replication_gz):
     """S2 driver-side download (osmcha/changeset.py:220-228 parity):
     sequence → padded URL path → urlretrieve → local file that the
     distributed scan then reads. Exercised against a file:// mirror of
@@ -124,9 +124,7 @@ def test_fetch_replication_file_url(tmp_path, spark):
     mirror.mkdir(parents=True)
     import shutil
 
-    shutil.copy(
-        "/root/reference/tests/245.osm.gz", mirror / "245.osm.gz"
-    )
+    shutil.copy(replication_gz, mirror / "245.osm.gz")
     dest = tmp_path / "dl"
     paths = fetch_replication(
         (245, 245), str(dest), base=f"file://{tmp_path}/mirror"
@@ -135,7 +133,8 @@ def test_fetch_replication_file_url(tmp_path, spark):
     assert read_replication(spark, str(dest)).count() == 25
 
 
-def test_stateful_user_stats_accumulate_across_restarts(spark, stream_dirs):
+def test_stateful_user_stats_accumulate_across_restarts(
+        spark, stream_dirs, replication_gz):
     """applyInPandasWithState operator (engine-only §2.8 extension): the
     per-uid running totals live in the state store, checkpointed with the
     query — a restart RESUMES the totals, so replaying the same minute as
@@ -147,7 +146,7 @@ def test_stateful_user_stats_accumulate_across_restarts(spark, stream_dirs):
     )
 
     in_dir, _out, ckpt = stream_dirs
-    shutil.copy(REF_GZ, os.path.join(in_dir, "000001.osm.gz"))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000001.osm.gz"))
 
     batch_counts = {
         r["uid"]: r["n"]
@@ -180,7 +179,7 @@ def test_stateful_user_stats_accumulate_across_restarts(spark, stream_dirs):
     assert all(r["first_seen"] is not None for r in got1.values())
 
     # same minute replayed as a NEW file → state resumes, totals double
-    shutil.copy(REF_GZ, os.path.join(in_dir, "000002.osm.gz"))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000002.osm.gz"))
     got2 = run("user_stats_run2")
     assert {u: r["changesets_count"] for u, r in got2.items()} == {
         u: 2 * n for u, n in batch_counts.items()
@@ -1035,6 +1034,99 @@ def test_stream_snapshot_append_exactly_once_and_incremental(
     assert T.read_snapshot(spark, table).count() == 5
     # every commit remains a time-travelable snapshot
     assert T.read_snapshot(spark, table, snapshot=0).count() == 2
+
+
+def test_stream_snapshot_append_empty_batches_commit_nothing(
+        spark, stream_dirs, tmp_path):
+    """An empty micro-batch (a zero-row parquet file), first or later,
+    creates no snapshot and leaves no file under data/ or staging; the
+    next non-empty batch commits normally, and a replayed
+    stream-batch-<id> only repoints."""
+    import glob
+
+    from osmcha_spark.sources import tables as T
+    from osmcha_spark.streaming import stream_snapshot_append
+
+    in_dir, _out, ckpt = stream_dirs
+    table = str(tmp_path / "table")
+    schema = "id long, part string"
+
+    def drain_file(rows, name):
+        tmp = str(tmp_path / f"_st_{name}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+        part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+        shutil.move(part, os.path.join(in_dir, f"{name}.parquet"))
+        ss = spark.readStream.schema(schema).parquet(in_dir)
+        stream_snapshot_append(ss, table, checkpoint_dir=ckpt,
+                               partition_col="part").awaitTermination()
+
+    def data_files():
+        return sorted(os.listdir(os.path.join(table, "data"))) \
+            if os.path.isdir(os.path.join(table, "data")) else []
+
+    def leftovers():
+        return [n for n in os.listdir(table) if n.startswith("_staging")] \
+            if os.path.isdir(table) else []
+
+    drain_file([], "e0")  # batch 0: empty, arrives first
+    assert T.current_snapshot(table) is None
+    assert data_files() == [] and leftovers() == []
+
+    drain_file([(1, "p1"), (2, "p2")], "b1")  # batch 1 creates
+    assert T.list_snapshots(table) == [0]
+    assert T._load_manifest(table, 0)["commit_id"] == "stream-batch-1"
+
+    drain_file([], "e2")  # batch 2: empty, arrives later
+    assert T.list_snapshots(table) == [0]
+    assert data_files() == sorted(f["name"] for f in T.snapshot_files(table))
+    assert leftovers() == []
+
+    drain_file([(3, "p1")], "b3")  # batch 3 appends
+    assert T.list_snapshots(table) == [0, 1]
+    assert T._load_manifest(table, 1)["commit_id"] == "stream-batch-3"
+    assert {r.id for r in T.read_snapshot(spark, table).collect()} \
+        == {1, 2, 3}
+
+    # crash between manifest and repoint: the replay only repoints
+    files_before = data_files()
+    T._point_current(table, 0)
+    replay = spark.createDataFrame([(3, "p1")], schema)
+    assert T.snapshot_append(replay, table, commit_id="stream-batch-3",
+                             _skip_empty=True) == 1
+    assert T.current_snapshot(table) == 1
+    assert data_files() == files_before
+    assert T.read_snapshot(spark, table).count() == 3
+
+
+def test_stream_snapshot_append_runs_no_emptiness_probe(
+        spark, stream_dirs, monkeypatch, replication_gz):
+    """Structural pin: the sink never calls DataFrame.isEmpty (one Spark
+    pass per micro-batch). A replication stream whose first file holds
+    an empty <osm/> drains with isEmpty raising, commits nothing for it,
+    and commits the next file's 25 changesets as the table's first
+    snapshot."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    from osmcha_spark.sources import tables as T
+    from osmcha_spark.sources.replication import write_replication_gz
+    from osmcha_spark.streaming import (
+        read_replication_stream,
+        stream_snapshot_append,
+    )
+
+    def no_probe(self):
+        raise AssertionError("stream sink ran an isEmpty() probe")
+
+    monkeypatch.setattr(ClassicDF, "isEmpty", no_probe)
+    in_dir, table, ckpt = stream_dirs
+    write_replication_gz([], os.path.join(in_dir, "000001.osm.gz"))
+    os.utime(os.path.join(in_dir, "000001.osm.gz"), (1, 1))
+    shutil.copy(replication_gz, os.path.join(in_dir, "000002.osm.gz"))
+    cs = read_replication_stream(spark, in_dir, max_files_per_trigger=1)
+    stream_snapshot_append(cs, table, ckpt).awaitTermination()
+    assert T.list_snapshots(table) == [0]
+    assert T._load_manifest(table, 0)["commit_id"] == "stream-batch-1"
+    assert T.read_snapshot(spark, table).count() == 25
 
 
 def test_stream_snapshot_merge_cdc_and_replay(spark, stream_dirs, tmp_path):

@@ -1355,6 +1355,65 @@ def test_snapshot_check_constraints_refuse_bad_writes(spark, tmp_path):
     assert T.read_snapshot(spark, p).count() == 3
 
 
+def test_snapshot_create_checks_written_after_commit(spark, tmp_path):
+    """_CHECKS.json lands only with a committed create: a create that
+    fails after validation leaves no constraint set behind, and a
+    commit_id replay may not swap the checks that governed the original
+    commit (same checks replay fine)."""
+    import pytest
+
+    good = spark.createDataFrame([(1, 10)], "id long, cents long")
+    p = str(tmp_path / "t")
+    with pytest.raises(ValueError, match="unknown partition transform"):
+        T.snapshot_create(good, p, checks=["cents >= 0"],
+                          partition_transform=("bogus", 2, "id"))
+    assert not os.path.exists(os.path.join(p, "_CHECKS.json"))
+    assert T.current_snapshot(p) is None
+
+    s0 = T.snapshot_create(good, p, commit_id="c0",
+                           checks=["cents >= 0"])
+    assert T.table_checks(p) == ["cents >= 0"]
+    assert T.snapshot_create(good, p, commit_id="c0",
+                             checks=["cents >= 0"]) == s0
+    with pytest.raises(ValueError, match="checks are set once"):
+        T.snapshot_create(good, p, commit_id="c0", checks=["id >= 0"])
+    with pytest.raises(ValueError, match="checks are set once"):
+        T.snapshot_create(good, p, commit_id="c0")
+    assert T.table_checks(p) == ["cents >= 0"]
+    assert T.list_snapshots(p) == [s0]
+
+
+def test_join_mv_sync_ignores_foreign_sync_tags(spark, tmp_path):
+    """Only sync-<a>-<b> tags are join_mv_sync frontiers: a single-part
+    sync-7 tag beside them is skipped, and a table tagged with nothing
+    but sync-7 is refused with the contract error, not an unpacking
+    ValueError."""
+    import pytest
+
+    from osmcha_spark.operators.incremental import join_mv_sync
+
+    A, B, MV = (str(tmp_path / x) for x in ("a", "b", "mv"))
+    T.snapshot_create(spark.range(0, 6).selectExpr("id AS key",
+                                                   "id AS nat"), A)
+    T.snapshot_create(spark.range(0, 6).selectExpr("id AS key",
+                                                   "id * 2 AS oid"), B)
+    join_mv_sync(spark, A, B, MV, "key", ["nat"], ["oid"])
+    T.snapshot_tag(MV, "sync-7")
+    T.snapshot_append(spark.range(6, 8).selectExpr("id AS key",
+                                                   "id AS nat"), A)
+    assert join_mv_sync(spark, A, B, MV, "key", ["nat"], ["oid"]) \
+        is not None
+    assert T.read_snapshot(spark, MV).count() == 6
+
+    other = str(tmp_path / "other")
+    T.snapshot_create(spark.range(0, 3).selectExpr("id AS key",
+                                                   "id AS nat"), other)
+    T.snapshot_tag(other, "sync-7")
+    with pytest.raises(ValueError,
+                       match="not a join_mv_sync-maintained view"):
+        join_mv_sync(spark, A, B, other, "key", ["nat"], ["oid"])
+
+
 def test_snapshot_replicate_delta_copy_and_guards(spark, tmp_path):
     """Replication (q197): the incremental sync copies ONLY the files
     appended since the frontier (file-name sets pinned), the replica

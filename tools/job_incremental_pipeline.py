@@ -6,7 +6,7 @@ updated in place, only touched partitions rewritten.
     spark-submit --master local[8] \
         --py-files dist/osmcha_spark.zip \
         tools/job_incremental_pipeline.py \
-        --replication-dir /root/reference/tests \
+        --replication-dir tests/data \
         --aux-dir tests/data --snapshot /tmp/snap1
 
 Flow (the reference's real update pattern — changesets are re-fetched

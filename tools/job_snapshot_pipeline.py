@@ -7,7 +7,7 @@ maintenance (compaction + snapshot expiry) runs in the same job.
     spark-submit --master local[8] \
         --py-files dist/osmcha_spark.zip \
         tools/job_snapshot_pipeline.py \
-        --replication-dir /root/reference/tests \
+        --replication-dir tests/data \
         --aux-dir tests/data --table /tmp/verdicts_tbl \
         --keep-snapshots 3
 

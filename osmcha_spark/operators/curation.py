@@ -613,7 +613,7 @@ def calibration_table(
     """
     w = int(width)
     s = F.col(score_col)
-    band = ((s - F.pmod(s, F.lit(w))) / w).cast("long")
+    band = F.call_function("div", s - F.pmod(s, F.lit(w)), F.lit(w))
     return (
         df.groupBy(band.alias("band"))
         .agg(

@@ -1975,7 +1975,7 @@ def snap_to_segments(
     bd = F.lit(int(bucket))
 
     def _fd(c):
-        return ((c - F.pmod(c, bd)) / bd).cast("long")
+        return F.call_function("div", c - F.pmod(c, bd), bd)
 
     segs = segments.select(
         "u", "o", "x1", "y1", "x2", "y2",

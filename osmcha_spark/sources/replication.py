@@ -1,27 +1,32 @@
 """Replication-file source: gzipped changeset-XML batches → changesets rows.
 
 Re-expresses ``ChangesetList.read_file`` + ``changeset_info``
-(osmcha/changeset.py:213-228, 77-93) as a distributed scan: one replication
-file ≈ one minute of edits, files are independent → ``binaryFile`` scan +
-``mapInPandas`` doing gunzip + ElementTree per file. Embarrassingly parallel
-(one task per file; at planet scale, millions of small files → coalesce by
-``spark.sql.files.maxPartitionBytes`` or compact upstream).
+(osmcha/changeset.py:213-228, 77-93) as a distributed scan with Spark's
+built-in XML reader, so gunzip and parse run in the JVM and no Python
+worker is forked. Files are independent (one ≈ one minute of edits), so
+the scan is embarrassingly parallel.
+
+The row tag is the root ``osm`` element, for strictness: the reader must
+parse each document whole, so a file cut in half inside a valid gzip, or
+``<osm><changeset``, raises. A ``changeset`` row tag silently returns the
+changesets before the cut, or none. The cost is one record per file: a
+file must fit in one task's memory, as it already had to when it was read
+as one ``binaryFile`` value. Only ``<tag>`` children are read; any other
+child of a ``<changeset>`` (a ``<discussion>``) is ignored.
 
 The tag pivot keeps the reference's dict-zip last-wins override
-(osmcha/changeset.py:84-93): an XML ``<tag k>`` literally named ``id``/
-``user``/``uid``/``created_at``/``comments_count`` is silently overridden by
-the attribute-derived value, because the attribute columns are written after
-the tag map is built and the map never holds mandatory keys.
+(osmcha/changeset.py:84-93): a ``<tag k>`` named ``id``/``user``/``uid``/
+``created_at``/``comments_count`` is dropped, because the attribute wins.
+A repeated ``<tag k>`` keeps its last value, as the reference's dict does;
+a tag without ``k`` is dropped; a changeset without tags gets ``{}``.
 """
 
 from __future__ import annotations
 
 import gzip
-import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 CHANGESETS_SCHEMA = (
     "id long, user string, uid string, created_at string, "
@@ -29,51 +34,51 @@ CHANGESETS_SCHEMA = (
     "max_lon double, max_lat double, tags map<string,string>"
 )
 
+_ATTRS = ("id", "user", "uid", "created_at", "comments_count")
+_BBOX = ("min_lon", "min_lat", "max_lon", "max_lat")
 
-def _parse_file(content: bytes) -> list[dict]:
-    root = ET.fromstring(gzip.decompress(content))
-    rows = []
-    for ch in root:
-        # Tag pivot (changeset_info): tags first, attributes override.
-        tags = {t.attrib.get("k"): t.attrib.get("v") for t in ch}
-        for k in ("id", "user", "uid", "created_at", "comments_count"):
-            tags.pop(k, None)  # attribute wins (dict-zip last-wins parity)
-
-        def fattr(name: str) -> float | None:
-            v = ch.get(name)
-            return float(v) if v is not None else None
-
-        rows.append(
-            {
-                "id": int(ch.get("id")),
-                "user": ch.get("user"),
-                "uid": ch.get("uid"),
-                "created_at": ch.get("created_at"),
-                "comments_count": ch.get("comments_count"),
-                "min_lon": fattr("min_lon"),
-                "min_lat": fattr("min_lat"),
-                "max_lon": fattr("max_lon"),
-                "max_lat": fattr("max_lat"),
-                "tags": tags,
-            }
-        )
-    return rows
+# One ``osm`` record per file; PERMISSIVE mode fills ``_corrupt_record``.
+_XML_SCHEMA = (
+    "changeset array<struct<_id: long, "
+    + "".join(f"_{a}: string, " for a in _ATTRS[1:])
+    + "".join(f"_{a}: double, " for a in _BBOX)
+    + "tag: array<struct<_k: string, _v: string>>>>, _corrupt_record string"
+)
 
 
-def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: Arrow batches of file ``content`` → changeset
-    rows. Shared by the batch scan and the streaming source."""
-    for pdf in batches:
-        out: list[dict] = []
-        for content in pdf["content"]:
-            out.extend(_parse_file(bytes(content)))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "id", "user", "uid", "created_at", "comments_count",
-                "min_lon", "min_lat", "max_lon", "max_lat", "tags",
-            ],
-        )
+def _xml(reader, mode: str):
+    """The one reader definition, for ``spark.read`` and
+    ``spark.readStream``. Surrounding spaces are kept, as ElementTree
+    keeps them."""
+    return (
+        reader.format("xml").schema(_XML_SCHEMA).option("rowTag", "osm")
+        .option("ignoreSurroundingSpaces", "false").option("mode", mode)
+    )
+
+
+def _tags(tag: Column) -> Column:
+    """``<tag>`` entries → the tags map (see the module docstring). The
+    last value per key is picked in the expression, so no session-level
+    ``mapKeyDedupPolicy`` is needed."""
+    kept = F.filter(
+        F.coalesce(tag, F.array()),
+        lambda t: t["_k"].isNotNull() & ~t["_k"].isin(*_ATTRS),
+    )
+    keys = F.array_distinct(F.transform(kept, lambda t: t["_k"]))
+    last = F.transform(
+        keys,
+        lambda k: F.element_at(F.filter(kept, lambda t: t["_k"] == k), -1),
+    )
+    return F.map_from_arrays(keys, F.transform(last, lambda t: t["_v"]))
+
+
+def _changesets(osm: DataFrame, *keep: str) -> DataFrame:
+    """``osm`` records of :func:`_xml` → one row per ``<changeset>`` (a
+    NULL changeset gives NULL tags), carrying the ``keep`` columns."""
+    c = F.col("c")
+    return osm.select(F.explode("changeset").alias("c"), *keep).select(
+        *(c[f"_{a}"].alias(a) for a in _ATTRS + _BBOX),
+        F.when(c.isNotNull(), _tags(c["tag"])).alias("tags"), *keep)
 
 
 def read_replication(spark: SparkSession, path: str) -> DataFrame:
@@ -81,67 +86,59 @@ def read_replication(spark: SparkSession, path: str) -> DataFrame:
     changesets schema.
 
     Strict (reference-parity) error behavior: a corrupt file fails the
-    scan, exactly as the reference's ``gzip.open`` + ElementTree would
-    crash (osmcha/changeset.py:213-228). For the planet-scale pipeline
-    where one bad minutely file must not poison a million-file scan,
-    use :func:`read_replication_robust`."""
-    binary = spark.read.format("binaryFile").load(path).select("content")
-    return binary.mapInPandas(parse_batches, CHANGESETS_SCHEMA)
-
-
-ROBUST_SCHEMA = (
-    CHANGESETS_SCHEMA + ", src_file string, parse_error string"
-)
-
-
-def parse_batches_robust(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Fault-contained variant of :func:`parse_batches` (the q53
-    decode_safe discipline applied to the source): each file parses
-    inside its own try — good files yield their rows with
-    ``parse_error`` NULL, a corrupt file yields exactly ONE quarantine
-    row (all data columns NULL, ``src_file`` + ``parse_error`` set)
-    instead of killing the task. One scan, no second pass; the
-    quarantine is an ordinary filter (``parse_error IS NOT NULL``)
-    downstream operators can route to a dead-letter sink."""
-    cols = [
-        "id", "user", "uid", "created_at", "comments_count",
-        "min_lon", "min_lat", "max_lon", "max_lat", "tags",
-        "src_file", "parse_error",
-    ]
-    for pdf in batches:
-        out: list[dict] = []
-        for content, src in zip(pdf["content"], pdf["path"]):
-            try:
-                rows = _parse_file(bytes(content))
-            except Exception as exc:  # noqa: BLE001 — quarantine, not mask
-                out.append({
-                    "id": None, "user": None, "uid": None,
-                    "created_at": None, "comments_count": None,
-                    "min_lon": None, "min_lat": None,
-                    "max_lon": None, "max_lat": None, "tags": None,
-                    "src_file": src,
-                    "parse_error": f"{type(exc).__name__}: {exc}",
-                })
-                continue
-            for r in rows:
-                r["src_file"] = src
-                r["parse_error"] = None
-            out.extend(rows)
-        yield pd.DataFrame(out, columns=cols)
+    scan (``FAILFAST``), exactly as the reference's ``gzip.open`` +
+    ElementTree would crash (osmcha/changeset.py:213-228). For the
+    planet-scale pipeline where one bad minutely file must not poison a
+    million-file scan, use :func:`read_replication_robust`."""
+    return _changesets(_xml(spark.read, "FAILFAST").load(path))
 
 
 def read_replication_robust(spark: SparkSession, path: str) -> DataFrame:
-    """Planet-scale replication scan with per-file fault containment:
-    same rows as :func:`read_replication` for parseable files, plus one
-    quarantine row per corrupt file (see :func:`parse_batches_robust`).
-    Schema adds ``(src_file, parse_error)``; good-row set equality with
-    the strict scan and quarantine behavior are pytest-gated."""
-    binary = spark.read.format("binaryFile").load(path).select(
-        "content", "path"
+    """Planet-scale replication scan with per-file fault containment (the
+    q53 decode_safe discipline applied to the source): the rows of
+    :func:`read_replication` with ``parse_error`` NULL, plus ONE
+    quarantine row per corrupt file (data columns NULL, ``src_file`` and
+    ``parse_error`` set) instead of a failed task. Downstream routes the
+    quarantine with an ordinary ``parse_error IS NOT NULL`` filter.
+
+    A readable file yields one ``osm`` record, even ``<osm/>``, so
+    malformed XML is one PERMISSIVE corrupt record → ``ParseError``. A
+    file the codec cannot read (a truncated gzip) yields no record under
+    ``ignoreCorruptFiles``; a content-free ``binaryFile`` listing finds it
+    → ``ReadError``. A gzip missing only its trailer decompresses whole,
+    so its rows are kept here while the strict scan fails on it."""
+    # binaryFile's ``path`` is the decoded form; the join key is the
+    # URL-encoded ``_metadata.file_path`` both scans share
+    listing = spark.read.format("binaryFile").load(path).select(
+        F.col("path").alias("src_file"),
+        F.col("_metadata.file_path").alias("_file"),
     )
-    return binary.mapInPandas(parse_batches_robust, ROBUST_SCHEMA)
+    osm = (
+        _xml(spark.read, "PERMISSIVE")
+        .option("ignoreCorruptFiles", "true")
+        .load(path)
+        .select(
+            F.col("_metadata.file_path").alias("_file"),
+            "changeset",
+            "_corrupt_record",
+            F.lit(True).alias("_read"),
+        )
+    )
+    error = F.when(
+        F.col("_read").isNull(),
+        F.lit("ReadError: unreadable file (truncated or corrupt gzip)"),
+    ).when(
+        F.col("_corrupt_record").isNotNull(),
+        F.lit("ParseError: malformed replication XML"),
+    )
+    files = listing.join(osm, "_file", "left").withColumn("parse_error", error)
+    # a quarantined file explodes to one NULL changeset
+    changeset = F.when(
+        F.col("parse_error").isNull(), F.coalesce("changeset", F.array())
+    ).otherwise(F.array(F.lit(None)))
+    return _changesets(
+        files.withColumn("changeset", changeset), "src_file", "parse_error"
+    )
 
 
 # Public replication endpoint the reference reads from (the docstring of
@@ -215,7 +212,7 @@ def fetch_replication(
 def write_replication_gz(rows: "list[dict]", path: str) -> None:
     """Serialize changeset rows back to the replication wire format
     (gzipped ``<osm><changeset …><tag …/></changeset></osm>``) — the
-    inverse of :func:`_parse_file`, for harnesses and tests that need
+    inverse of :func:`read_replication`, for harnesses and tests that need
     scenario rows to ARRIVE as a replication batch. ``rows`` follow the
     CHANGESETS_SCHEMA field names; bbox attrs are omitted when None/NaN
     (the relation-only changeset shape)."""

@@ -9,8 +9,10 @@ resumes from it. That is exactly Spark's streaming file source contract:
   files each micro-batch consumed (replaces ``state.yaml``); a restart
   resumes after the last committed batch and never re-emits a file.
 - **micro-batch = replication file(s)** — each ``.osm.gz`` is parsed
-  independently (embarrassingly parallel), identical to the batch scan in
-  :mod:`osmcha_spark.sources.replication`.
+  independently by the batch scan's strict XML reader and projection
+  (:mod:`osmcha_spark.sources.replication`), so a truncated or malformed
+  file fails its micro-batch. The offset log holds only file paths, so a
+  checkpoint written when this source was a ``binaryFile`` scan resumes.
 - **catch-up mode** — ``Trigger.AvailableNow`` drains the backlog then
   stops, the batch-ish "process everything since my cursor" mode the
   reference's minutely cron loop approximates.
@@ -29,7 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from osmcha_spark.config import RulesConfig
 from osmcha_spark.plans.analyse import analyse
-from osmcha_spark.sources.replication import CHANGESETS_SCHEMA, parse_batches
+from osmcha_spark.sources.replication import _changesets, _xml
 
 
 def read_replication_stream(
@@ -44,19 +46,10 @@ def read_replication_stream(
     file ≈ one minute of edits; leave unset for ``AvailableNow`` catch-up,
     set ~60 for steady-state minutely ingest with bounded task counts).
     """
-    reader = (
-        spark.readStream.format("binaryFile")
-        # streaming sources require an explicit schema; binaryFile's is fixed
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", glob)
-    )
+    reader = _xml(spark.readStream, "FAILFAST").option("pathGlobFilter", glob)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    binary = reader.load(path).select("content")
-    return binary.mapInPandas(parse_batches, CHANGESETS_SCHEMA)
+    return _changesets(reader.load(path))
 
 
 def analysed_stream(

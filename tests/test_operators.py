@@ -3411,6 +3411,26 @@ def test_snap_to_segments_planted_geometry(spark):
     assert out2 == {20: 20, 21: 29}
 
 
+def test_snap_to_segments_buckets_exact_past_2_53(spark):
+    """Coordinates near 2^62 bucket exactly (int64 ``div``). The segment
+    starts in bucket m and the point sits 1 unit past its end, in bucket
+    m + 1. Through float ``/`` the two bucket starts round to different
+    doubles 1024 apart, the buckets land 16 apart, and the point was
+    silently dropped."""
+    from osmcha_spark.operators.tiles import snap_to_segments
+
+    x = 1 << 62
+    segs = spark.createDataFrame(
+        [(1, 1, x + 530, 0, x + 535, 0)],
+        "u long, o long, x1 long, y1 long, x2 long, y2 long")
+    pts = spark.createDataFrame([(1, x + 536, 0)],
+                                "pid long, x long, y long")
+    out = [(r.pid, r.u, r.d2q)
+           for r in snap_to_segments(pts, segs, radius=10,
+                                     bucket=40).collect()]
+    assert out == [(1, 1, 1)]
+
+
 def test_k_core_peel_cascade_and_fixed_point(spark):
     """Planted graphs: a 4-clique with a pendant path under k=3 peels
     the tail and keeps the clique intact; a pure path under k=2
@@ -3554,6 +3574,21 @@ def test_calibration_table_floor_bands(spark):
         1: (2, 1, 500, 999),
         2: (1, 1, 1000, 1000),
     }
+
+
+def test_calibration_table_bands_exact_past_2_53(spark):
+    """Scores beyond 2^53 band exactly: the floor division runs in int64
+    ``div``, so a double's 53-bit mantissa never rounds a band (through
+    float ``/``, 2^60 + 7 at width 2 banded to 2^59, not 2^59 + 3)."""
+    from osmcha_spark.operators.curation import calibration_table
+
+    big = (1 << 60) + 7
+    df = spark.createDataFrame([(big, 1), (-big, 0)],
+                               "score long, label long")
+    out = {r.band: (r.n, r.min_score)
+           for r in calibration_table(df, "score", "label",
+                                      width=2).collect()}
+    assert out == {(big - 1) // 2: (1, big), -(big + 1) // 2: (1, -big)}
 
 
 def test_quantile_normalize_ranks_and_edges(spark):

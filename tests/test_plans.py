@@ -45,6 +45,46 @@ def test_analyse_plan_has_no_python(spark, tables):
     assert "ArrowEvalPython" in _plan(parity)
 
 
+PYTHON_NODES = ("MapInPandas", "PythonMapInArrow", "ArrowEvalPython",
+                "BatchEvalPython")
+
+
+def test_replication_scans_have_no_python(spark, tmp_path, replication_gz,
+                                          tables):
+    """The replication XML is parsed in the JVM: neither the batch scans
+    nor a micro-batch of the analysed stream holds a Python node (the
+    executed plan of the stream's last batch is read off the query)."""
+    import shutil
+
+    from osmcha_spark.sources.replication import (
+        read_replication,
+        read_replication_robust,
+    )
+    from osmcha_spark.streaming import (
+        analysed_stream,
+        read_replication_stream,
+    )
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    shutil.copy(replication_gz, in_dir / "000001.osm.gz")
+    plans = [_plan(read_replication(spark, str(in_dir))),
+             _plan(read_replication_robust(spark, str(in_dir)))]
+    stream = analysed_stream(read_replication_stream(spark, str(in_dir)),
+                             action_counts(tables["actions"]),
+                             tables["users"])
+    q = (stream.writeStream.format("noop")
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    plans.append(
+        q._jsq.streamingQuery().lastExecution().executedPlan().toString())
+    for plan in plans:
+        for node in PYTHON_NODES:
+            assert node not in plan, plan
+    assert "FileScan xml" in plans[-1], plans[-1]
+
+
 def test_analyse_users_join_broadcasts(spark, tables):
     cs, actions, users = _cs(tables), tables["actions"], tables["users"]
     out = analyse(cs, action_counts(actions), users)

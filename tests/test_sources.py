@@ -1,5 +1,6 @@
 """Replication-source robustness: the strict scan is reference-parity
-(a corrupt file crashes, as the reference's gzip+ElementTree would);
+(a corrupt file crashes, as the reference's gzip+ElementTree would,
+and every reader trap of the tag pivot is pinned);
 read_replication_robust quarantines per file instead — the q53
 fault-containment discipline applied at the source, for the
 planet-scale regime where one bad minutely file must not poison a
@@ -10,8 +11,10 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from osmcha_spark.sources.replication import (
+    CHANGESETS_SCHEMA,
     read_replication,
     read_replication_robust,
 )
@@ -40,6 +43,98 @@ def test_strict_scan_fails_on_corrupt_file(spark, mixed_dir):
     # wrapper text is not.
     with pytest.raises(Exception):
         read_replication(spark, mixed_dir).count()
+
+
+def _half_document(good: bytes) -> bytes:
+    xml = gzip.decompress(good)
+    return gzip.compress(xml[: len(xml) // 2])
+
+
+# corruption kind -> (make the corrupt bytes from a good file, the label
+# the robust scan quarantines it under)
+CORRUPTIONS = {
+    "truncated_gzip": (lambda good: good[:200], "ReadError"),
+    "unclosed_xml": (lambda good: gzip.compress(b"<osm><changeset"),
+                     "ParseError"),
+    "half_document": (_half_document, "ParseError"),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(CORRUPTIONS))
+def test_each_corruption_fails_strict_and_quarantines_robust(
+        spark, tmp_path, replication_gz, kind):
+    """Each kind of corruption on its own, beside one good file: the
+    strict scan fails, and the robust scan quarantines exactly that file
+    and keeps the good file's rows. A half document inside a valid gzip
+    must fail too, not yield the changesets before the cut. The
+    directory name holds a space and a ``%``, so the robust scan's
+    file-path join must not depend on URL encoding."""
+    make, label = CORRUPTIONS[kind]
+    with open(replication_gz, "rb") as fh:
+        good = fh.read()
+    d = tmp_path / "repl dir%20"
+    d.mkdir()
+    (d / "000.osm.gz").write_bytes(good)
+    (d / "001.osm.gz").write_bytes(make(good))
+    with pytest.raises(Exception):
+        read_replication(spark, str(d)).collect()
+
+    robust = read_replication_robust(spark, str(d)).collect()
+    bad = [(r.src_file.rsplit("/", 1)[-1], r.parse_error.split(":")[0])
+           for r in robust if r.parse_error is not None]
+    assert bad == [("001.osm.gz", label)]
+    assert sum(r.parse_error is None for r in robust) == 25
+
+
+# Reader traps, in one file: spaces around values, a repeated tag key,
+# tag keys named after attributes, a tag without k, a <discussion> child
+# (not a <tag>), a changeset with no tags and no bbox.
+TRAPS_XML = (
+    b'<osm version="0.6">'
+    b'<changeset id="1" user=" pad " uid="7" '
+    b'created_at="2020-01-01T00:00:00Z" comments_count="2" '
+    b'min_lon="1.5" min_lat="-2.25" max_lon="3" max_lat="4">'
+    b'<tag k="comment" v=" spaced "/>'
+    b'<tag k="source" v="first"/><tag k="source" v="last"/>'
+    b'<tag k="id" v="99"/><tag k="user" v="someone"/>'
+    b'<tag v="keyless"/>'
+    b'<discussion><comment date="2020-01-02T00:00:00Z" uid="8" '
+    b'user="x"><text>looks fine</text></comment></discussion>'
+    b'</changeset>'
+    b'<changeset id="2" user="u" uid="9" '
+    b'created_at="2020-01-01T00:00:01Z" comments_count="0"/>'
+    b'</osm>'
+)
+
+
+def test_reader_traps(spark, tmp_path):
+    """The tag pivot's edge cases, next to an ``<osm/>`` file that must
+    add no rows. A non-tag child used to kill the whole scan (it became
+    a NULL-keyed map entry that Arrow could not cast)."""
+    d = tmp_path / "traps"
+    d.mkdir()
+    (d / "000.osm.gz").write_bytes(gzip.compress(TRAPS_XML))
+    (d / "001.osm.gz").write_bytes(gzip.compress(b"<osm/>"))
+    got = sorted((r.asDict() for r in read_replication(spark, str(d))
+                  .collect()), key=lambda r: r["id"])
+    assert got == [
+        {"id": 1, "user": " pad ", "uid": "7",
+         "created_at": "2020-01-01T00:00:00Z", "comments_count": "2",
+         "min_lon": 1.5, "min_lat": -2.25, "max_lon": 3.0, "max_lat": 4.0,
+         "tags": {"comment": " spaced ", "source": "last"}},
+        {"id": 2, "user": "u", "uid": "9",
+         "created_at": "2020-01-01T00:00:01Z", "comments_count": "0",
+         "min_lon": None, "min_lat": None, "max_lon": None, "max_lat": None,
+         "tags": {}},
+    ]
+    assert read_replication(spark, str(d / "001.osm.gz")).count() == 0
+    assert read_replication(spark, str(d)).schema.simpleString() == (
+        StructType.fromDDL(CHANGESETS_SCHEMA).simpleString())
+    robust = sorted((r.asDict() for r in read_replication_robust(
+        spark, str(d)).collect()), key=lambda r: r["id"])
+    assert [r.pop("parse_error") for r in robust] == [None, None]
+    assert all(r.pop("src_file").endswith("000.osm.gz") for r in robust)
+    assert robust == got
 
 
 def test_robust_scan_quarantines_per_file(spark, mixed_dir, replication_gz):

@@ -69,6 +69,30 @@ def test_stream_batch_dedup_on_id(spark, stream_dirs, replication_gz):
     assert out.select("id").distinct().count() == 25
 
 
+def test_stream_drain_fails_on_truncated_file(spark, stream_dirs,
+                                              replication_gz):
+    """A truncated ``.osm.gz`` fails the micro-batch that reads it (the
+    strict reader), so a drain never commits a partial minute. The
+    benchmark's self-test counts on this failure."""
+    from pyspark.errors import StreamingQueryException
+
+    from osmcha_spark.streaming import (
+        read_replication_stream,
+        run_replication_stream,
+    )
+
+    in_dir, out_dir, ckpt = stream_dirs
+    with open(replication_gz, "rb") as fh:
+        data = fh.read()
+    with open(os.path.join(in_dir, "000001.osm.gz"), "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    q = run_replication_stream(read_replication_stream(spark, in_dir),
+                               out_dir, ckpt)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination()
+    assert not os.path.exists(out_dir)
+
+
 def test_streamed_analysis_equals_batch(
         spark, stream_dirs, tables, replication_gz):
     from osmcha_spark.plans.analyse import action_counts, analyse

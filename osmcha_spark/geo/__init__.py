@@ -7,4 +7,3 @@ from osmcha_spark.geo.cells import (  # noqa: F401
     neighbors_col,
 )
 from osmcha_spark.geo.pip import point_in_ring_col, point_in_ring_np  # noqa: F401
-from osmcha_spark.geo.intersects import rect_ring_intersects_udf  # noqa: F401

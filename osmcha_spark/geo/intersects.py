@@ -11,11 +11,10 @@ Decomposition (any ⇒ intersects):
   3. a rectangle edge and a polygon edge intersect (proper crossing,
      collinear overlap, or endpoint touch).
 
-The predicate runs as an Arrow-vectorized pandas UDF over the bbox struct
-columns with the (small, driver-side) AOI ring captured in the closure —
-O(rows × ring-edges) numpy, no per-row Python. It is only ever evaluated on
-the survivors of the coarse cell prefilter join (operators/aoi.py), so at
-100 TB the exact test touches a tiny fraction of the corpus.
+``rect_ring_intersects_np`` is the vectorized numpy kernel — O(rows ×
+ring-edges), no per-row Python — for code that already holds numpy arrays
+(operators/tiles.py) and as the tests' reference. The AOI filter and join
+evaluate the same predicate JVM-side (operators/aoi.py:rect_ring_sql).
 
 For axis-aligned rectangular AOIs there is also a pure-Column fast path
 (interval overlap on both axes) used by the oracle-checked queries.
@@ -24,11 +23,8 @@ For axis-aligned rectangular AOIs there is also a pure-Column fast path
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 from osmcha_spark.geo.pip import point_in_ring_np
 
@@ -119,26 +115,6 @@ def rect_ring_intersects_np(
         ).any(axis=1)
 
     return valid & (vert_in_rect | corner_in_poly | edge_hit)
-
-
-def rect_ring_intersects_udf(ring: list[tuple[float, float]]):
-    """pandas UDF factory: (min_lon, min_lat, max_lon, max_lat) → bool,
-    with the AOI ring baked into the task closure (implicit broadcast)."""
-    ring_arr = np.asarray(ring, dtype=np.float64)
-
-    @pandas_udf(BooleanType())
-    def _intersects(
-        min_lon: pd.Series, min_lat: pd.Series,
-        max_lon: pd.Series, max_lat: pd.Series,
-    ) -> pd.Series:
-        out = rect_ring_intersects_np(
-            min_lon.to_numpy(np.float64), min_lat.to_numpy(np.float64),
-            max_lon.to_numpy(np.float64), max_lat.to_numpy(np.float64),
-            ring_arr,
-        )
-        return pd.Series(out)
-
-    return _intersects
 
 
 def rect_rect_intersects_col(

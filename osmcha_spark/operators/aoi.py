@@ -1,26 +1,34 @@
 """AOI spatial filter: the scaled form of ``ChangesetList.filter``
 (osmcha/changeset.py:239-245).
 
-Two-stage coarse-then-exact (GeoBlocks-style):
+Two-stage coarse-then-exact:
 
 1. **cell prefilter** — the AOI ring is polyfilled driver-side to a covering
    cell set at an adaptively chosen level (coarse enough that the literal
    set stays ≤ ``max_cells``); each changeset bbox's covering cells come from
    the pure-Column polyfill, and ``arrays_overlap`` against the literal cell
    array runs JVM-side with no join and no shuffle at all.
-2. **exact test** — only on prefilter survivors: the vectorized
-   rect-vs-ring predicate (geo/intersects.py), or the pure-Column interval
-   test when the AOI is an axis-aligned rectangle (the reference fixture's
-   map.geojson is).
+2. **exact test** — only on prefilter survivors: the rect∩ring predicate
+   (``rect_ring_sql``) over the ring's edge array, or the pure-Column
+   interval test when the AOI is an axis-aligned rectangle (the reference
+   fixture's map.geojson is). Neither crosses into Python.
 
 At 100 TB stage 1 prunes the scan down to the AOI's cells — and because the
 cell id is a plain int64 column expression, writing the corpus partitioned/
 sorted by cell turns stage 1 into parquet row-group pruning via min/max
 stats, before any executor even reads the data.
 
-For *many* AOIs at once, ``aoi_join`` explodes both sides' covering cells
-and equi-joins on the cell id (broadcast when the AOI side is small),
-followed by the same exact predicate.
+For *many* AOIs at once, ``aoi_join`` is one broadcast-hash-join stage with
+no shuffle. Each AOI carries its ring, its edge array (built once per AOI)
+and the first cell indices ``(ax0, ay0)`` of its bbox cover, and is
+exploded into the ``(x, y)`` cell-index pairs of that cover; each changeset
+bbox is exploded the same way and carries its own ``(cx0, cy0)``. Both
+covers are rectangles of cells, so a pair that meets at all meets in a
+rectangle of cells whose lower-left corner
+``(greatest(cx0, ax0), greatest(cy0, ay0))`` is its one *reference cell*
+(Dittrich & Seeger, ICDE 2000): keeping only that row leaves each candidate
+pair exactly once, with no ``dropDuplicates`` and no Exchange. The exact
+predicate then runs once per candidate.
 """
 
 from __future__ import annotations
@@ -28,11 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osmcha_spark.geo.cells import covering_cells_col
-from osmcha_spark.geo.intersects import (
-    rect_rect_intersects_col,
-    rect_ring_intersects_udf,
-)
+from osmcha_spark.geo.cells import _axis_sql, covering_cells_col
+from osmcha_spark.geo.intersects import rect_rect_intersects_col
 from osmcha_spark.sources.geojson import ring_bbox, ring_is_rectangle
 
 import numpy as np
@@ -84,6 +89,76 @@ def pick_level(ring: list[tuple[float, float]], max_cells: int = 256) -> int:
     return 0
 
 
+# One struct per closed-ring edge a→b (last→first included): what the
+# exact predicate reads, so per-edge differences and bounds are computed
+# once per AOI instead of once per candidate pair.
+_EDGE_FIELDS = ("ax", "ay", "by", "dx", "dy", "x_lo", "x_hi", "y_lo", "y_hi")
+
+
+def _edges_sql(ring: str) -> str:
+    """SQL for the edge array of an ``array<struct<lon,lat>>`` column."""
+    ab = (f"transform({ring}, (p, i) -> named_struct("
+          f"'a', p, 'b', {ring}[(i + 1) % size({ring})]))")
+    return (
+        f"transform({ab}, s -> named_struct("
+        "'ax', s.a.lon, 'ay', s.a.lat, 'by', s.b.lat, "
+        "'dx', s.b.lon - s.a.lon, 'dy', s.b.lat - s.a.lat, "
+        "'x_lo', least(s.a.lon, s.b.lon), 'x_hi', greatest(s.a.lon, s.b.lon), "
+        "'y_lo', least(s.a.lat, s.b.lat), 'y_hi', greatest(s.a.lat, s.b.lat)))"
+    )
+
+
+def _edges_literal(ring: list[tuple[float, float]]) -> str:
+    """The same edge array as a SQL literal, built driver-side."""
+    pts = [(float(x), float(y)) for x, y in ring]
+    structs = []
+    for (ax, ay), (bx, by) in zip(pts, pts[1:] + pts[:1]):
+        vals = (ax, ay, by, bx - ax, by - ay,
+                min(ax, bx), max(ax, bx), min(ay, by), max(ay, by))
+        structs.append("named_struct(" + ", ".join(
+            f"'{k}', CAST('{v!r}' AS DOUBLE)"
+            for k, v in zip(_EDGE_FIELDS, vals)) + ")")
+    return f"array({', '.join(structs)})"
+
+
+def rect_ring_sql(edges: str) -> str:
+    """SQL predicate: the closed bbox (``min_lon``, ``min_lat``, ``max_lon``,
+    ``max_lat`` columns) meets the ring whose edge array is ``edges``.
+    Touching counts; a bbox with any NULL bound is no bbox (false).
+
+    The full rect∩ring decomposition: (1) a bbox corner inside the ring —
+    even-odd PNPOLY with its half-open rule ``(ay > y) != (by > y)``, the
+    four corners' parities folded as bits of one int in a single pass;
+    (2) a ring vertex inside the bbox; (3) a ring edge crossing the bbox.
+    (3) is required: a "plus-sign" overlap (tall bbox × wide ring) holds no
+    vertex of either shape in the other, only edge crossings. It is exact
+    by separating axes for this convex pair (axes = the rect's x/y + the
+    edge's normal): the edge's bbox overlaps the rect AND the rect's
+    corners do not all lie strictly on one side of the edge's line."""
+    corners = (("min_lon", "min_lat"), ("max_lon", "min_lat"),
+               ("max_lon", "max_lat"), ("min_lon", "max_lat"))
+    parity = " | ".join(
+        f"CASE WHEN ((e.ay > {y}) != (e.by > {y})) AND "
+        f"({x} < e.dx * ({y} - e.ay) / e.dy + e.ax) THEN {1 << k} ELSE 0 END"
+        for k, (x, y) in enumerate(corners)
+    )
+    sides = [f"(e.dx * ({y} - e.ay) - e.dy * ({x} - e.ax))" for x, y in corners]
+    vertex_in = ("e.ax >= min_lon AND e.ax <= max_lon "
+                 "AND e.ay >= min_lat AND e.ay <= max_lat")
+    edge_cross = (
+        "e.x_lo <= max_lon AND e.x_hi >= min_lon "
+        "AND e.y_lo <= max_lat AND e.y_hi >= min_lat "
+        f"AND NOT ({' AND '.join(s + ' > 0' for s in sides)}) "
+        f"AND NOT ({' AND '.join(s + ' < 0' for s in sides)})"
+    )
+    return (
+        "(min_lon IS NOT NULL AND min_lat IS NOT NULL "
+        "AND max_lon IS NOT NULL AND max_lat IS NOT NULL "
+        f"AND (aggregate({edges}, 0, (acc, e) -> acc ^ ({parity})) != 0 "
+        f"OR exists({edges}, e -> ({vertex_in}) OR ({edge_cross}))))"
+    )
+
+
 def filter_by_aoi(
     changesets: DataFrame,
     ring: list[tuple[float, float]],
@@ -112,10 +187,7 @@ def filter_by_aoi(
             ring_bbox(ring),
         )
     else:
-        pred = rect_ring_intersects_udf(ring)(
-            F.col("min_lon"), F.col("min_lat"),
-            F.col("max_lon"), F.col("max_lat"),
-        )
+        pred = F.expr(rect_ring_sql(_edges_literal(ring)))
     return out.where(F.coalesce(pred, F.lit(False)))
 
 
@@ -126,118 +198,52 @@ def aoi_join(
     broadcast_aois: bool = True,
 ) -> DataFrame:
     """Many-AOI variant: ``aois(aoi_id, ring array<struct<lon,lat>>)`` ⋈
-    changesets on covering cell, then the exact PIP/intersects predicate.
+    changesets on the level-``level`` cells of both bbox covers, then the
+    exact rect∩ring predicate (``rect_ring_sql``).
 
-    Both sides polyfill to the same level and equi-join on the int64 cell —
-    a plan Catalyst can broadcast, reorder, and AQE-skew-split. Result is
-    (aoi_id, changeset columns), deduplicated per pair (a bbox covering k
-    cells matches each AOI at most once).
+    Output: the changeset columns, then ``aoi_id`` and ``ring``; one row
+    per intersecting (AOI row, changeset row) pair, so one row per
+    (aoi_id, id) whenever ids are unique on each side. The plan is a single
+    broadcast hash join on the cell indices ``(x, y)`` with no Exchange:
+    only the pair's reference cell survives (module docstring). Each
+    expression is one SQL string, so building the plan costs a handful of
+    driver→JVM calls whatever the predicate's size.
     """
-    cs = changesets.withColumn(
-        "__cell",
-        F.explode(
-            covering_cells_col(
-                F.col("min_lon"), F.col("min_lat"),
-                F.col("max_lon"), F.col("max_lat"), level,
-            )
-        ),
+    def ax(c):
+        return _axis_sql(c, 180.0, 360.0, level)
+
+    def ay(c):
+        return _axis_sql(c, 90.0, 180.0, level)
+
+    cs = (
+        changesets.selectExpr(
+            "*", f"{ax('min_lon')} AS __cxa", f"{ax('max_lon')} AS __cxb",
+            f"{ay('min_lat')} AS __cya", f"{ay('max_lat')} AS __cyb",
+        )
+        # a NULL bound's index clamps to 0 (greatest skips NULL); the
+        # predicate's NULL guard drops that row after the join
+        .selectExpr("*", "explode(sequence(__cxa, __cxb)) AS __x")
+        .selectExpr("*", "explode(sequence(__cya, __cyb)) AS __y")
     )
-    ao = aois.select(
-        "aoi_id", "ring",
-        F.explode(
-            covering_cells_col(
-                F.aggregate(
-                    "ring", F.lit(float("inf")),
-                    lambda acc, p: F.least(acc, p["lon"]),
-                ),
-                F.aggregate(
-                    "ring", F.lit(float("inf")),
-                    lambda acc, p: F.least(acc, p["lat"]),
-                ),
-                F.aggregate(
-                    "ring", F.lit(float("-inf")),
-                    lambda acc, p: F.greatest(acc, p["lon"]),
-                ),
-                F.aggregate(
-                    "ring", F.lit(float("-inf")),
-                    lambda acc, p: F.greatest(acc, p["lat"]),
-                ),
-                level,
-            )
-        ).alias("__cell"),
+    ao = (
+        aois.selectExpr(
+            "aoi_id", "ring", f"{_edges_sql('ring')} AS __edges",
+            f"{ax('array_min(ring.lon)')} AS __ax0",
+            f"{ax('array_max(ring.lon)')} AS __ax1",
+            f"{ay('array_min(ring.lat)')} AS __ay0",
+            f"{ay('array_max(ring.lat)')} AS __ay1",
+        )
+        .selectExpr("*", "explode(sequence(__ax0, __ax1)) AS __x")
+        .selectExpr("*", "explode(sequence(__ay0, __ay1)) AS __y")
     )
     if broadcast_aois:
         ao = F.broadcast(ao)
-    joined = cs.join(ao, "__cell").drop("__cell").dropDuplicates(
-        ["aoi_id", "id"]
+    keep = F.expr(
+        "__x = greatest(least(__cxa, __cxb), __ax0) "
+        "AND __y = greatest(least(__cya, __cyb), __ay0) "
+        f"AND coalesce({rect_ring_sql('__edges')}, false)"
     )
-
-    # exact predicate per pair — the full rect∩ring decomposition, all
-    # Column-side: (1) a bbox corner inside the ring, (2) a ring vertex
-    # inside the bbox, (3) a ring edge crossing the bbox. (3) is required:
-    # a "plus-sign" overlap (tall bbox × wide ring) contains no vertex of
-    # either shape in the other, only edge crossings.
-    from osmcha_spark.geo.pip import point_in_ring_col
-
-    min_lon, min_lat = F.col("min_lon"), F.col("min_lat")
-    max_lon, max_lat = F.col("max_lon"), F.col("max_lat")
-    ring = F.col("ring")
-    corner_in = (
-        point_in_ring_col(min_lon, min_lat, ring)
-        | point_in_ring_col(max_lon, min_lat, ring)
-        | point_in_ring_col(max_lon, max_lat, ring)
-        | point_in_ring_col(min_lon, max_lat, ring)
+    return cs.join(ao, ["__x", "__y"]).where(keep).drop(
+        "__x", "__y", "__cxa", "__cxb", "__cya", "__cyb", "__edges",
+        "__ax0", "__ax1", "__ay0", "__ay1",
     )
-    vertex_in = F.exists(
-        ring,
-        lambda p: (p["lon"] >= min_lon) & (p["lon"] <= max_lon)
-        & (p["lat"] >= min_lat) & (p["lat"] <= max_lat),
-    )
-    edge_cross = F.exists(
-        _ring_edges(ring),
-        lambda e: _segment_hits_rect(
-            e, min_lon, min_lat, max_lon, max_lat
-        ),
-    )
-    return joined.where(
-        F.coalesce(corner_in | vertex_in | edge_cross, F.lit(False))
-    )
-
-
-def _ring_edges(ring):
-    """array<struct<ax,ay,bx,by>> of the closed ring's edges."""
-    n = F.size(ring)
-    return F.transform(
-        F.sequence(F.lit(0), n - 1),
-        lambda i: F.struct(
-            ring[i]["lon"].alias("ax"), ring[i]["lat"].alias("ay"),
-            ring[(i + 1) % n]["lon"].alias("bx"),
-            ring[(i + 1) % n]["lat"].alias("by"),
-        ),
-    )
-
-
-def _segment_hits_rect(e, min_lon, min_lat, max_lon, max_lat):
-    """Inclusive segment ∩ axis-aligned rect, by separating axes (exact for
-    this convex pair: axes = rect's x/y + the segment's normal):
-    the segment's bbox overlaps the rect AND the rect's corners do not all
-    lie strictly on one side of the segment's supporting line."""
-    bbox_overlap = (
-        (F.least(e["ax"], e["bx"]) <= max_lon)
-        & (F.greatest(e["ax"], e["bx"]) >= min_lon)
-        & (F.least(e["ay"], e["by"]) <= max_lat)
-        & (F.greatest(e["ay"], e["by"]) >= min_lat)
-    )
-    dx = e["bx"] - e["ax"]
-    dy = e["by"] - e["ay"]
-
-    def side(px, py):
-        return dx * (py - e["ay"]) - dy * (px - e["ax"])
-
-    s1 = side(min_lon, min_lat)
-    s2 = side(max_lon, min_lat)
-    s3 = side(max_lon, max_lat)
-    s4 = side(min_lon, max_lat)
-    all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
-    all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
-    return bbox_overlap & ~all_pos & ~all_neg

@@ -27,6 +27,13 @@ from pyspark.sql import functions as F
 from osmcha_spark.geo.cells import cell_col, covering_cells_col
 
 
+def _floor_div(c: Column, d: int) -> Column:
+    """Exact int64 floor of ``c / d`` for ``d > 0``: ``pmod`` lies in
+    [0, d), so ``c - pmod(c, d)`` is a multiple of ``d`` and ``div``
+    divides it with no rounding. Float ``/`` rounds past 2^53."""
+    return F.call_function("div", c - F.pmod(c, F.lit(d)), F.lit(d))
+
+
 def tiles_with_cells(
     images: DataFrame,
     lon_col: Column,
@@ -1513,14 +1520,11 @@ def hexbin(
 
     def _near_even(v: Column, d: int) -> Column:
         # nearest multiple of 2d: 2d * floor((v + d) / 2d), half up
-        s = v + F.lit(d)
-        fd = (s - F.pmod(s, F.lit(2 * d))) / F.lit(2 * d)
-        return fd.cast("long") * F.lit(2 * d)
+        return _floor_div(v + F.lit(d), 2 * d) * F.lit(2 * d)
 
     def _near_odd(v: Column, d: int) -> Column:
         # nearest ODD multiple of d: 2d * floor(v / 2d) + d
-        fd = (v - F.pmod(v, F.lit(2 * d))) / F.lit(2 * d)
-        return fd.cast("long") * F.lit(2 * d) + F.lit(d)
+        return _floor_div(v, 2 * d) * F.lit(2 * d) + F.lit(d)
 
     axc, ayc = _near_even(x, dx), _near_even(y, dy)
     bxc, byc = _near_odd(x, dx), _near_odd(y, dy)
@@ -1665,11 +1669,9 @@ def segment_crossings(
         .where(F.col("x1").isNotNull())
         .where((F.col("x1") != F.col("x2")) | (F.col("y1") != F.col("y2")))
     )
-    bd = F.lit(bucket)
-    bx = ((F.least("x1", "x2") - F.pmod(F.least("x1", "x2"), bd)) / bd)
-    by = ((F.least("y1", "y2") - F.pmod(F.least("y1", "y2"), bd)) / bd)
-    segs = segs.withColumn("bx", bx.cast("long")).withColumn(
-        "by", by.cast("long"))
+    segs = segs.withColumn(
+        "bx", _floor_div(F.least("x1", "x2"), bucket)).withColumn(
+        "by", _floor_div(F.least("y1", "y2"), bucket))
 
     left = segs.select(
         F.col("u").alias("u1"), F.col("o").alias("o1"),
@@ -1743,16 +1745,15 @@ def idw_surface(
     Scale shape: stations shuffle ONCE into buckets; the grid side
     (usually raster-scale) explodes 9 probe keys and broadcast-joins;
     one map-side-combined groupBy per grid point."""
-    rd = F.lit(radius)
-    sbx = ((F.col(x_col) - F.pmod(F.col(x_col), rd)) / rd).cast("long")
-    sby = ((F.col(y_col) - F.pmod(F.col(y_col), rd)) / rd).cast("long")
+    sbx = _floor_div(F.col(x_col), radius)
+    sby = _floor_div(F.col(y_col), radius)
     st = stations.select(
         F.col(x_col).alias("sx"), F.col(y_col).alias("sy"),
         F.col(val_col).alias("v"),
         sbx.alias("jx"), sby.alias("jy"),
     )
-    gbx = ((F.col(gx_col) - F.pmod(F.col(gx_col), rd)) / rd).cast("long")
-    gby = ((F.col(gy_col) - F.pmod(F.col(gy_col), rd)) / rd).cast("long")
+    gbx = _floor_div(F.col(gx_col), radius)
+    gby = _floor_div(F.col(gy_col), radius)
     g = grid.select(
         F.col(gx_col).alias("qx"), F.col(gy_col).alias("qy"),
         F.explode(
@@ -1972,15 +1973,10 @@ def snap_to_segments(
     map-side-combined min(struct) groupBy on (pid) — no window over
     candidates, no all-pairs anywhere.
     """
-    bd = F.lit(int(bucket))
-
-    def _fd(c):
-        return F.call_function("div", c - F.pmod(c, bd), bd)
-
     segs = segments.select(
         "u", "o", "x1", "y1", "x2", "y2",
-        _fd(F.least("x1", "x2")).alias("bx"),
-        _fd(F.least("y1", "y2")).alias("by"),
+        _floor_div(F.least("x1", "x2"), int(bucket)).alias("bx"),
+        _floor_div(F.least("y1", "y2"), int(bucket)).alias("by"),
     )
     seg9 = segs.select(
         "u", "o", "x1", "y1", "x2", "y2",
@@ -1994,7 +1990,8 @@ def snap_to_segments(
     pts = points.select(
         F.col(pid_col).alias("pid"),
         F.col(px_col).alias("px"), F.col(py_col).alias("py"),
-        _fd(F.col(px_col)).alias("jx"), _fd(F.col(py_col)).alias("jy"),
+        _floor_div(F.col(px_col), int(bucket)).alias("jx"),
+        _floor_div(F.col(py_col), int(bucket)).alias("jy"),
     )
     dx = F.col("x2") - F.col("x1")
     dy = F.col("y2") - F.col("y1")

@@ -16,10 +16,7 @@ from osmcha_spark.geo.cells import (
     covering_cells_col,
     neighbors_col,
 )
-from osmcha_spark.geo.intersects import (
-    rect_ring_intersects_np,
-    rect_ring_intersects_udf,
-)
+from osmcha_spark.geo.intersects import rect_ring_intersects_np
 from osmcha_spark.geo.pip import point_in_ring_col, point_in_ring_np, ring_literal
 from osmcha_spark.operators.aoi import filter_by_aoi, aoi_join
 
@@ -158,16 +155,16 @@ def test_aoi_filter_exact_udf_agrees(spark, tables):
     # force the generic (non-rectangle) path by perturbing one vertex by 0
     ring = AOI_RING[:-1] + [AOI_RING[0]]
     out = filter_by_aoi(cs, ring)
-    udf = rect_ring_intersects_udf(ring)
-    brute = cs.where(
-        F.coalesce(
-            udf(F.col("min_lon"), F.col("min_lat"),
-                F.col("max_lon"), F.col("max_lat")),
-            F.lit(False),
-        )
+    # the reference is the numpy kernel over every row, no prefilter
+    pdf = cs.select("id", "min_lon", "min_lat", "max_lon", "max_lat") \
+        .toPandas()
+    hit = rect_ring_intersects_np(
+        *(pdf[c].to_numpy(np.float64)
+          for c in ("min_lon", "min_lat", "max_lon", "max_lat")),
+        np.asarray(ring, dtype=np.float64),
     )
     assert sorted(r["id"] for r in out.select("id").collect()) == sorted(
-        r["id"] for r in brute.select("id").collect()
+        pdf["id"][hit].tolist()
     )
 
 
@@ -180,6 +177,69 @@ def test_aoi_join_multi(spark, tables):
     pairs = {(r["aoi_id"], r["id"]) for r in out.select("aoi_id", "id").collect()}
     assert ("map", 31982803) in pairs
     assert all(a != "concave" for a, _ in pairs)  # no fixture bbox near (0..4)
+
+
+# (id, min_lon, min_lat, max_lon, max_lat) against AOI_CONCAVE (a "C":
+# the square [0,4]² minus the notch (1,4]×(1,3)) and a triangle
+HOSTILE_BOXES = [
+    (1, 1.5, 1.5, 2.5, 2.5),       # inside the notch: concave miss
+    (2, 2.0, 0.5, 3.0, 3.5),       # spans the notch, crosses both arms
+    (3, 4.0, 4.0, 5.0, 5.0),       # touches the vertex (4, 4) only
+    (4, 2.0, 4.0, 3.0, 5.0),       # lies on the top edge y = 4
+    (5, 2.0, 1.0, 3.0, 2.0),       # lies on the notch's floor y = 1
+    (6, 1.0, 1.0, 1.0, 1.0),       # point on a reflex vertex
+    (7, 0.0, 2.0, 0.0, 2.0),       # point on the edge x = 0
+    (8, 2.0, 2.0, 2.0, 2.0),       # point in the notch
+    (9, 0.5, 0.5, 0.5, 0.5),       # point inside
+    (10, None, None, None, None),  # no bbox
+    (11, 0.5, None, 0.5, 0.5),     # one NULL bound
+    # many cells, starting left of and below both AOIs: the pair's
+    # reference cell is the AOI's first cell, not the bbox's
+    (12, -30.0, -10.0, 2.0, 2.5),
+    (13, 1.5, 1.2, 30.0, 2.8),     # many cells, notch to open sea: miss
+    (14, -30.0, -10.0, 30.0, 30.0),  # covers both AOIs
+    (15, 14.0, 14.0, 16.0, 16.0),  # inside the triangle
+    (16, 10.0, 18.0, 12.0, 20.0),  # beside the triangle's slanted edge
+    (17, 12.0, 15.0, 12.5, 15.5),  # touches the slanted edge at (12.5, 15)
+]
+HOSTILE_AOIS = [
+    ("concave", AOI_CONCAVE),
+    ("tri", [(10.0, 10.0), (20.0, 10.0), (15.0, 20.0), (10.0, 10.0)]),
+]
+
+
+@pytest.mark.parametrize("level", [6, 8])
+def test_aoi_join_hostile_matches_numpy(spark, level):
+    """``aoi_join`` (and ``filter_by_aoi`` on each ring) equal the numpy
+    kernel pair for pair: exact touches, a concave notch, point and NULL
+    bboxes, string ids, and multi-cell bboxes whose candidate pairs meet
+    in many cells yet come out once."""
+    cs = spark.createDataFrame(
+        HOSTILE_BOXES,
+        "id long, min_lon double, min_lat double, max_lon double, "
+        "max_lat double",
+    )
+    aois = spark.createDataFrame(
+        HOSTILE_AOIS,
+        "aoi_id string, ring array<struct<lon: double, lat: double>>",
+    )
+    box = np.array([[np.nan if v is None else v for v in b[1:]]
+                    for b in HOSTILE_BOXES])
+    want = sorted(
+        (aid, b[0])
+        for aid, ring in HOSTILE_AOIS
+        for b, hit in zip(HOSTILE_BOXES, rect_ring_intersects_np(
+            *box.T, np.asarray(ring, dtype=np.float64)))
+        if hit
+    )
+    assert ("concave", 1) not in want and ("concave", 6) in want
+    out = aoi_join(cs, aois, level=level)
+    assert out.columns == cs.columns + ["aoi_id", "ring"]
+    assert sorted((r["aoi_id"], r["id"]) for r in out.collect()) == want
+    for aid, ring in HOSTILE_AOIS:
+        got = filter_by_aoi(cs, ring, level=level).select("id").collect()
+        assert sorted(r["id"] for r in got) == [i for a, i in want
+                                                if a == aid]
 
 
 # ---------------------------------------------------------------- property

@@ -3431,6 +3431,67 @@ def test_snap_to_segments_buckets_exact_past_2_53(spark):
     assert out == [(1, 1, 1)]
 
 
+
+def test_hexbin_exact_past_2_53(spark):
+    """Coordinates past 2^53 bin exactly (int64 ``div``). Through float
+    ``/``, (2^60 + 12345, 5) went to the B-center (x − 21, 173) instead
+    of its nearest A-center (x + 79, 0)."""
+    from osmcha_spark.operators.tiles import hexbin
+
+    dx, dy = 100, 173
+    x = (1 << 60) + 12345
+    pts = [(x, 5), (-x, -5), (7, x)]
+    df = spark.createDataFrame(pts, "ix: long, iy: long")
+    got = {(r.hx, r.hy): r.n for r in hexbin(df, dx, dy).collect()}
+
+    def brute(px, py):
+        a = (2 * dx * ((px + dx) // (2 * dx)), 2 * dy * ((py + dy) // (2 * dy)))
+        b = (2 * dx * (px // (2 * dx)) + dx, 2 * dy * (py // (2 * dy)) + dy)
+        da = (px - a[0]) ** 2 + (py - a[1]) ** 2
+        db = (px - b[0]) ** 2 + (py - b[1]) ** 2
+        return a if da <= db else b
+
+    assert brute(x, 5) == (x + 79, 0)
+    assert got == {brute(px, py): 1 for px, py in pts}
+
+
+def test_segment_crossings_buckets_exact_past_2_53(spark):
+    """Two segments near 2^62 cross across a bucket boundary: their
+    starts sit in adjacent buckets, so the 3×3 probe finds the pair.
+    Through float ``/`` the two buckets landed 16 apart and the crossing
+    was silently dropped."""
+    from osmcha_spark.operators.tiles import segment_crossings
+
+    x = (1 << 62) + 534
+    rows = [
+        (1, 0, 1, x, 0), (1, 10, 2, x + 10, 10),
+        (2, 0, 3, x + 2, 10), (2, 10, 4, x + 12, 0),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id: long, ts: long, event_id: long, ix: long, iy: long"
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = {(r.u1, r.o1, r.u2, r.o2)
+           for r in segment_crossings(df, bucket=40,
+                                      order_col="event_id").collect()}
+    assert got == {(1, 1, 2, 3)}
+
+
+
+def test_idw_surface_buckets_exact_past_2_53(spark):
+    """A station 2 units from a grid point near 2^62 sits in the
+    neighbouring bucket and is found (int64 ``div``). Through float
+    ``/`` the two buckets landed 16 apart and the grid point had no
+    station in radius."""
+    from osmcha_spark.operators.tiles import idw_surface
+
+    x = (1 << 62) + 534
+    st = spark.createDataFrame([(x + 2, 0, 5)], "sx: long, sy: long, v: long")
+    grid = spark.createDataFrame([(x, 0)], "qx: long, qy: long")
+    w = (40 * 40 - 4) ** 2
+    assert [tuple(r) for r in idw_surface(st, grid, radius=40).collect()] \
+        == [(x, 0, 1, w, 5 * w)]
+
+
 def test_k_core_peel_cascade_and_fixed_point(spark):
     """Planted graphs: a 4-clique with a pendant path under k=3 peels
     the tail and keeps the clique intact; a pure path under k=2

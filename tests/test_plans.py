@@ -85,6 +85,28 @@ def test_replication_scans_have_no_python(spark, tmp_path, replication_gz,
     assert "FileScan xml" in plans[-1], plans[-1]
 
 
+def test_aoi_join_is_one_broadcast_stage(spark, tables):
+    """``aoi_join`` runs as one broadcast hash join with no shuffle (the
+    reference cell replaces a ``dropDuplicates``), and neither it nor
+    ``filter_by_aoi``'s non-rectangle exact test evaluates Python. The
+    plan is read after execution, so it is AQE's final plan."""
+    from osmcha_spark.fixtures import AOI_CONCAVE
+    from osmcha_spark.operators.aoi import aoi_join, filter_by_aoi
+
+    cs = _cs(tables)
+    joined = aoi_join(cs, tables["aoi"], level=8)
+    filtered = filter_by_aoi(cs, AOI_CONCAVE)
+    for df in (joined, filtered):
+        df.collect()
+        plan = _plan(df)
+        for node in PYTHON_NODES:
+            assert node not in plan, plan
+    plan = _plan(joined)
+    assert "BroadcastHashJoin" in plan, plan
+    assert not [ln for ln in plan.splitlines()
+                if "Exchange" in ln and "BroadcastExchange" not in ln], plan
+
+
 def test_analyse_users_join_broadcasts(spark, tables):
     cs, actions, users = _cs(tables), tables["actions"], tables["users"]
     out = analyse(cs, action_counts(actions), users)

@@ -3,6 +3,9 @@ on Spark AND its oracle_sql() twin on DuckDB over the same sf dir, compare
 row count, column names (sorted), and an order-insensitive value multiset.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+Each query argument is a full query name (``q30_aoi_join``, not ``q30``);
+an argument that names no query is refused before Spark starts.
 """
 
 from __future__ import annotations
@@ -90,8 +93,15 @@ def main():
     import __spark_entry__ as entry_mod
     from osmcha_spark.session import get_spark
 
+    qs = entry_mod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"no such query: {' '.join(unknown)} (use full names, "
+              f"e.g. q30_aoi_join)", file=sys.stderr)
+        sys.exit(2)
+
     spark = get_spark(
-        master="local[8]",
+        master=f"local[{os.cpu_count() or 1}]",
         shuffle_partitions=16,
         extra_conf={
             "spark.ui.enabled": "false",
@@ -113,7 +123,6 @@ def main():
                 )
         return con
 
-    qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
     for name, fn in qs.items():

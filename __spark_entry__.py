@@ -5297,8 +5297,7 @@ def q102_clustered_aoi_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered = cs.withColumn(
         "cell",
         cell_col(
-            (F.col("min_lon") + F.col("max_lon")) / 2,
-            (F.col("min_lat") + F.col("max_lat")) / 2,
+            "(min_lon + max_lon) / 2", "(min_lat + max_lat) / 2",
             fine,
         ),
     )
@@ -8346,8 +8345,7 @@ def q146_snapshot_aoi_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cs = synth.changesets_df(spark, sf_dir).withColumn(
         "cell",
         cell_col(
-            (F.col("min_lon") + F.col("max_lon")) / 2,
-            (F.col("min_lat") + F.col("max_lat")) / 2,
+            "(min_lon + max_lon) / 2", "(min_lat + max_lat) / 2",
             fine,
         ),
     )

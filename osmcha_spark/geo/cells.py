@@ -13,16 +13,26 @@ Spec (ours, deterministic, golden-pinned):
   lat ∈ [-90, 90] (equirectangular — adequate for an index; exact predicates
   always re-check).
 - ``x = clamp(floor((lon+180)/360 * 2^L), 0, 2^L-1)``, same for ``y`` with
-  (lat+90)/180.
+  (lat+90)/180. A NULL coordinate gives a NULL index, so a NULL cell and
+  an empty (NULL) polyfill.
 - ``cell = morton(x, y) | (L << 56)``: x in even bits, y in odd bits, level
   tag in the high byte so ids from different levels never collide.
 
-Three equivalent implementations, cross-checked in tests:
-``cell_col`` (pure Column — JVM, codegen, no UDF), ``cell_sql`` (ANSI SQL
-text for the DuckDB oracle), ``cell_np`` (numpy for inside-UDF contexts).
-The bit-spread uses the classic branch-free magic-mask sequence, so the
-Column version is 10 integer ops — cheap enough to compute inline at scan
-time and never worth materializing RDD-side.
+Two implementations, cross-checked in tests: SQL text (``cell_sql``,
+``covering_cells_sql``, ``neighbors_sql``) and numpy (``cell_np`` and
+``covering_cells_np``, for inside-UDF and driver-side contexts). ``cell_sql`` is dialect-neutral: the engine runs it
+(``cell_col`` is ``F.expr`` over it) and the DuckDB oracles run the same
+text. The Morton spread is one masked shift per bit, ``(v & 2^i) << i``,
+so its input appears once per bit: linear in the level. The classic
+magic-mask spread uses its input twice per step, and Catalyst holds an
+expression as a tree, not a DAG, so five steps put 32 copies of each axis
+expression in the plan, evaluated again per cell inside the polyfill's
+(interpreted) lambdas.
+
+The Column DSL forms were dropped because a plan built node by node costs
+one driver→JVM call per node: one ``cell_col`` took 522 calls and a
+``knn_join`` about 2,000, at 0.3–1 ms each. An ``F.expr`` over the same text
+costs a handful, and the JVM parses it at analysis time.
 """
 
 from __future__ import annotations
@@ -34,11 +44,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # 64-bit part1by1 bit-spread (classic branch-free morton masks, public
-# domain folklore): supports up to 24-bit axis inputs (level ≤ 24, 48
-# payload bits < the 56-bit level-tag boundary). For ≤16-bit inputs the
-# extra shift-16 step is a no-op and every mask acts like its 32-bit
-# truncation, so cell ids at levels ≤ 16 are IDENTICAL to the narrow
-# implementation this replaced (pinned in tests/test_geo.py).
+# domain folklore) for the numpy and driver-side integer encoders:
+# supports up to 24-bit axis inputs (level ≤ 24, 48 payload bits < the
+# 56-bit level-tag boundary).
 MAX_LEVEL = 24
 
 _SPREAD_MASKS = [
@@ -50,48 +58,98 @@ _SPREAD_MASKS = [
 ]
 
 
-def _spread_col(v: Column) -> Column:
-    v = v.bitwiseAND(F.lit(0xFFFFFF))
-    for shift, mask in _SPREAD_MASKS:
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
-    return v
+def _sql(c: str | Column) -> str:
+    """SQL text of an encoder argument: a column name or SQL string as
+    is, a bare column reference (``F.col("lon")``) as its quoted name.
+    Any other Column has no recoverable SQL text."""
+    if isinstance(c, str):
+        return c
+    node = c._jc.node()
+    if node.productPrefix() != "UnresolvedAttribute":
+        raise TypeError(
+            f"expected a column name, a SQL string or F.col(name), got {c}; "
+            "pass a computed coordinate as its SQL string, e.g. "
+            "'(min_lon + max_lon) / 2'"
+        )
+    parts = node.nameParts().mkString("\0").split("\0")
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
-def _axis_col(coord: Column, offset: float, span: float, level: int) -> Column:
+def _spread_sql(expr: str, bits: int = MAX_LEVEL) -> str:
+    """Bits ``0 .. bits-1`` of ``expr`` moved to the even bits, one masked
+    shift per bit (``&``, ``<<`` and ``|`` only, so DuckDB runs the same
+    text). A NULL input gives NULL."""
+    if bits == 0:
+        return f"(({expr}) & 0)"
+    return "(" + " | ".join(
+        f"((({expr}) & {1 << i}) << {i})" if i else f"(({expr}) & 1)"
+        for i in range(bits)
+    ) + ")"
+
+
+def _spread_col(v: str | Column) -> Column:
+    return F.expr(_spread_sql(_sql(v)))
+
+
+def _raw_sql(expr: str, offset: float, span: float, level: int) -> str:
     lim = 1 << level
-    raw = F.floor((coord + F.lit(offset)) / F.lit(span) * F.lit(float(lim)))
-    return F.least(F.greatest(raw.cast("long"), F.lit(0)), F.lit(lim - 1))
-
-
-def cell_col(lon: Column, lat: Column, level: int) -> Column:
-    """int64 cell id as a pure Column expression."""
-    x = _spread_col(_axis_col(lon, 180.0, 360.0, level))
-    y = _spread_col(_axis_col(lat, 90.0, 180.0, level))
     return (
-        x.bitwiseOR(F.shiftleft(y, 1)).bitwiseOR(F.lit(level << 56))
+        f"CAST(floor((({expr}) + {offset!r}E0) / {span!r}E0 "
+        f"* {float(lim)!r}E0) AS BIGINT)"
     )
 
 
-def _spread_sql(expr: str) -> str:
-    out = f"({expr} & {0xFFFFFF})"
-    for shift, mask in _SPREAD_MASKS:
-        out = f"((({out} | ({out} << {shift}))) & {mask})"
-    return out
+def _clamp_sql(expr: str, offset: float, span: float, level: int) -> str:
+    """Axis index of a non-NULL coordinate (least/greatest skip NULL)."""
+    raw = _raw_sql(expr, offset, span, level)
+    return f"least(greatest({raw}, 0), {(1 << level) - 1})"
 
 
 def _axis_sql(expr: str, offset: float, span: float, level: int) -> str:
-    lim = 1 << level
-    raw = (
-        f"CAST(floor((({expr}) + {offset}) / {span} * {float(lim)}) AS BIGINT)"
+    """Axis index; ``+ 0 * raw`` makes it NULL for a NULL coordinate. Not
+    a CASE: Spark pushes comparisons and arithmetic into CASE branches,
+    and over a coordinate that is itself a CASE the pushed predicates
+    grow multiplicatively."""
+    raw = _raw_sql(expr, offset, span, level)
+    return f"({_clamp_sql(expr, offset, span, level)} + 0 * {raw})"
+
+
+def _axis_col(
+    coord: str | Column, offset: float, span: float, level: int
+) -> Column:
+    return F.expr(_axis_sql(_sql(coord), offset, span, level))
+
+
+def _morton_sql(x: str, y: str, level: int) -> str:
+    return (
+        f"({_spread_sql(x, level)} | ({_spread_sql(y, level)} << 1) "
+        f"| {level << 56})"
     )
-    return f"least(greatest({raw}, 0), {lim - 1})"
 
 
 def cell_sql(lon_expr: str, lat_expr: str, level: int) -> str:
-    """The same cell id as dialect-neutral SQL (DuckDB + Spark SQL)."""
-    x = _spread_sql(_axis_sql(lon_expr, 180.0, 360.0, level))
-    y = _spread_sql(_axis_sql(lat_expr, 90.0, 180.0, level))
-    return f"(({x}) | (({y}) << 1) | {level << 56})"
+    """int64 cell id as dialect-neutral SQL (Spark SQL and DuckDB).
+
+    The NULL test wraps the whole key, never an axis copy: Spark then
+    reduces the ``isnotnull(cell)`` it infers for a join on the key to
+    ``isnotnull(lon) AND isnotnull(lat)`` instead of pushing a second
+    copy of the encoder into a Filter, and no ``& 2^i`` is pushed into a
+    per-axis CASE branch."""
+    morton = _morton_sql(
+        _clamp_sql(lon_expr, 180.0, 360.0, level),
+        _clamp_sql(lat_expr, 90.0, 180.0, level),
+        level,
+    )
+    return (
+        f"CASE WHEN ({lon_expr}) IS NULL OR ({lat_expr}) IS NULL THEN NULL "
+        f"ELSE {morton} END"
+    )
+
+
+def cell_col(lon: str | Column, lat: str | Column, level: int) -> Column:
+    """int64 cell id; ``lon``/``lat`` are column names, SQL strings or
+    bare column references."""
+    return F.expr(cell_sql(_sql(lon), _sql(lat), level))
 
 
 def _spread_np(v: np.ndarray) -> np.ndarray:
@@ -101,15 +159,30 @@ def _spread_np(v: np.ndarray) -> np.ndarray:
     return v
 
 
-def cell_np(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
+def _axis_np(coord, offset: float, span: float, level: int) -> np.ndarray:
     lim = 1 << level
-    x = np.clip(
-        np.floor((lon + 180.0) / 360.0 * float(lim)).astype(np.int64), 0, lim - 1
-    )
-    y = np.clip(
-        np.floor((lat + 90.0) / 180.0 * float(lim)).astype(np.int64), 0, lim - 1
-    )
+    raw = np.floor((np.asarray(coord, np.float64) + offset) / span * float(lim))
+    return np.clip(raw.astype(np.int64), 0, lim - 1)
+
+
+def cell_np(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
+    x = _axis_np(lon, 180.0, 360.0, level)
+    y = _axis_np(lat, 90.0, 180.0, level)
     return _spread_np(x) | (_spread_np(y) << 1) | np.int64(level << 56)
+
+
+def covering_cells_np(
+    min_lon: float, min_lat: float, max_lon: float, max_lat: float,
+    level: int,
+) -> np.ndarray:
+    """Driver-side polyfill of one bbox: the cells of
+    :func:`covering_cells_sql`, in the same x-major order."""
+    xs = np.arange(_axis_np(min_lon, 180.0, 360.0, level),
+                   _axis_np(max_lon, 180.0, 360.0, level) + 1)
+    ys = np.arange(_axis_np(min_lat, 90.0, 180.0, level),
+                   _axis_np(max_lat, 90.0, 180.0, level) + 1)
+    grid = _spread_np(xs)[:, None] | (_spread_np(ys)[None, :] << 1)
+    return (grid | np.int64(level << 56)).ravel()
 
 
 def cell_level_for_radius(radius_deg: float) -> int:
@@ -124,13 +197,6 @@ def cell_level_for_radius(radius_deg: float) -> int:
         else MAX_LEVEL
     )
     return max(0, min(MAX_LEVEL, level))
-
-
-def _xy_cols(lon: Column, lat: Column, level: int) -> tuple[Column, Column]:
-    return (
-        _axis_col(lon, 180.0, 360.0, level),
-        _axis_col(lat, 90.0, 180.0, level),
-    )
 
 
 def parent_cell_col(cell: Column) -> Column:
@@ -149,100 +215,68 @@ def parent_cell_col(cell: Column) -> Column:
     return F.shiftright(morton, 2).bitwiseOR(F.shiftleft(level - 1, 56))
 
 
-def _morton_from_xy(x: Column, y: Column, level: int) -> Column:
+def _cells_sql(bounds: str, level: int) -> str:
+    """array<long> of the cells of the index rectangle ``[x0, x1] ×
+    [y0, y1]``, x-major. ``bounds`` is a struct of the four indices, bound
+    once so each appears once in the plan. NULL bounds give NULL (no
+    cells)."""
     return (
-        _spread_col(x)
-        .bitwiseOR(F.shiftleft(_spread_col(y), 1))
-        .bitwiseOR(F.lit(level << 56))
+        f"flatten(transform(array({bounds}), b -> flatten(transform("
+        f"sequence(b.x0, b.x1), cx -> transform(sequence(b.y0, b.y1), "
+        f"cy -> {_morton_sql('cx', 'cy', level)})))))"
     )
 
 
-_NEIGHBOR_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-
-
-def neighbors_col(lon: Column, lat: Column, level: int) -> Column:
-    """array<long> of the point's cell and its ≤8 grid neighbors (clamped at
-    the grid edge, deduplicated). The standard kNN/radius candidate key set.
-
-    The quantized (x, y) pair is let-bound via a single-element struct array
-    so the axis expression appears ONCE in the plan — inlining it 9× blows
-    the expression tree past the whole-stage-codegen size limit and drops
-    the projection to interpreted mode (observed; that is a real 100-TB
-    regression, not cosmetics)."""
-    lim = 1 << level
-    x, y = _xy_cols(lon, lat, level)
-    xy = F.array(F.struct(x.alias("x"), y.alias("y")))
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NEIGHBOR_OFFSETS
-        ]
+def neighbors_sql(lon: str, lat: str, level: int) -> str:
+    """Spark SQL for :func:`neighbors_col`."""
+    top = (1 << level) - 1
+    x = _axis_sql(lon, 180.0, 360.0, level)
+    y = _axis_sql(lat, 90.0, 180.0, level)
+    # `+ 0 * v` keeps a NULL index NULL through least/greatest
+    return _cells_sql(
+        f"named_struct('x0', greatest({x} - 1, 0) + 0 * {x}, "
+        f"'x1', least({x} + 1, {top}) + 0 * {x}, "
+        f"'y0', greatest({y} - 1, 0) + 0 * {y}, "
+        f"'y1', least({y} + 1, {top}) + 0 * {y})",
+        level,
     )
-    return F.array_distinct(
-        F.flatten(
-            F.transform(
-                xy,
-                lambda s: F.transform(
-                    offsets,
-                    lambda d: _morton_from_xy(
-                        F.least(
-                            F.greatest(s["x"] + d["dx"], F.lit(0)),
-                            F.lit(lim - 1),
-                        ),
-                        F.least(
-                            F.greatest(s["y"] + d["dy"], F.lit(0)),
-                            F.lit(lim - 1),
-                        ),
-                        level,
-                    ),
-                ),
-            )
-        )
+
+
+def neighbors_col(lon: str | Column, lat: str | Column, level: int) -> Column:
+    """array<long> of the point's cell and its ≤8 grid neighbors (cut at
+    the grid edge). The standard kNN/radius candidate key set."""
+    return F.expr(neighbors_sql(_sql(lon), _sql(lat), level))
+
+
+def covering_cells_sql(
+    min_lon: str, min_lat: str, max_lon: str, max_lat: str, level: int
+) -> str:
+    """Spark SQL for :func:`covering_cells_col`."""
+    return _cells_sql(
+        f"named_struct("
+        f"'x0', {_axis_sql(min_lon, 180.0, 360.0, level)}, "
+        f"'x1', {_axis_sql(max_lon, 180.0, 360.0, level)}, "
+        f"'y0', {_axis_sql(min_lat, 90.0, 180.0, level)}, "
+        f"'y1', {_axis_sql(max_lat, 90.0, 180.0, level)})",
+        level,
     )
 
 
 def covering_cells_col(
-    min_lon: Column, min_lat: Column, max_lon: Column, max_lat: Column,
+    min_lon: str | Column, min_lat: str | Column,
+    max_lon: str | Column, max_lat: str | Column,
     level: int,
 ) -> Column:
-    """Polyfill: array<long> of every level-L cell overlapping the bbox.
+    """Polyfill: array<long> of every level-L cell overlapping the bbox,
+    x-major.
 
-    Pure Column (sequence + nested transform + flatten) so Catalyst keeps it
-    JVM-side; callers explode it to get the (cell, row) assignment pairs that
-    feed the raster↔vector equi-join. Degenerate (point/line) bboxes yield
-    their single covering cell. NULL coords yield NULL (no cells).
-
-    Same let-binding pattern as neighbors_col: the four axis expressions are
-    bound once in a struct array, keeping the tree codegen-sized.
-    """
-    x0, y0 = _xy_cols(min_lon, min_lat, level)
-    x1, y1 = _xy_cols(max_lon, max_lat, level)
-    bounds = F.array(
-        F.struct(
-            x0.alias("x0"), x1.alias("x1"), y0.alias("y0"), y1.alias("y1")
-        )
-    )
-    return F.flatten(
-        F.transform(
-            bounds,
-            lambda b: F.flatten(
-                F.transform(
-                    F.sequence(b["x0"], b["x1"]),
-                    lambda x: F.transform(
-                        F.sequence(b["y0"], b["y1"]),
-                        lambda y: _morton_from_xy(x, y, level),
-                    ),
-                )
-            ),
-        )
-    )
-
-
-def _spread_int(v: int) -> int:
-    v &= 0xFFFFFF
-    for shift, mask in _SPREAD_MASKS:
-        v = (v | (v << shift)) & mask
-    return v
+    Evaluated in the JVM (sequence + nested transform + flatten); callers
+    explode it to get the (cell, row) assignment pairs that feed the
+    raster↔vector equi-join. Degenerate (point/line) bboxes yield their
+    single covering cell. A NULL bound yields NULL (no cells)."""
+    return F.expr(covering_cells_sql(
+        _sql(min_lon), _sql(min_lat), _sql(max_lon), _sql(max_lat), level
+    ))
 
 
 def cell_ranges_for_rect(
@@ -271,18 +305,8 @@ def cell_ranges_for_rect(
             f"fine_level={fine_level} < coarse_level={coarse_level}"
         )
 
-    def axis(coord: float, offset: float, span: float) -> int:
-        lim = 1 << coarse_level
-        raw = int(math.floor((coord + offset) / span * float(lim)))
-        return min(max(raw, 0), lim - 1)
-
-    x0, x1 = axis(min_lon, 180.0, 360.0), axis(max_lon, 180.0, 360.0)
-    y0, y1 = axis(min_lat, 90.0, 180.0), axis(max_lat, 90.0, 180.0)
-    mortons = sorted(
-        _spread_int(x) | (_spread_int(y) << 1)
-        for x in range(x0, x1 + 1)
-        for y in range(y0, y1 + 1)
-    )
+    cells = covering_cells_np(min_lon, min_lat, max_lon, max_lat, coarse_level)
+    mortons = sorted((cells & ((1 << 56) - 1)).tolist())
     span4 = 4 ** (fine_level - coarse_level)
     runs: list[list[int]] = []
     for m in mortons:

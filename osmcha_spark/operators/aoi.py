@@ -36,11 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osmcha_spark.geo.cells import _axis_sql, covering_cells_col
+from osmcha_spark.geo.cells import (
+    _axis_sql, covering_cells_np, covering_cells_sql)
 from osmcha_spark.geo.intersects import rect_rect_intersects_col
 from osmcha_spark.sources.geojson import ring_bbox, ring_is_rectangle
-
-import numpy as np
 
 
 def aoi_covering_cells(
@@ -48,29 +47,7 @@ def aoi_covering_cells(
 ) -> list[int]:
     """Driver-side polyfill of the ring's bbox at ``level`` (numpy; the
     coarse set may overshoot the ring — stage 2 is exact anyway)."""
-    min_lon, min_lat, max_lon, max_lat = ring_bbox(ring)
-    lim = 1 << level
-
-    def axis(v, off, span):
-        return int(
-            np.clip(np.floor((v + off) / span * lim), 0, lim - 1)
-        )
-
-    xi0, xi1 = axis(min_lon, 180.0, 360.0), axis(max_lon, 180.0, 360.0)
-    yi0, yi1 = axis(min_lat, 90.0, 180.0), axis(max_lat, 90.0, 180.0)
-    xs = np.arange(xi0, xi1 + 1, dtype=np.int64)
-    ys = np.arange(yi0, yi1 + 1, dtype=np.int64)
-
-    def spread(v):
-        v = v & 0xFFFF
-        for shift, mask in (
-            (8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555)
-        ):
-            v = (v | (v << shift)) & mask
-        return v
-
-    grid = spread(xs)[:, None] | (spread(ys)[None, :] << 1) | (level << 56)
-    return [int(c) for c in grid.ravel()]
+    return covering_cells_np(*ring_bbox(ring), level).tolist()
 
 
 def pick_level(ring: list[tuple[float, float]], max_cells: int = 256) -> int:
@@ -169,14 +146,13 @@ def filter_by_aoi(
     level = level if level is not None else pick_level(ring)
     cells = aoi_covering_cells(ring, level)
 
-    coarse = F.arrays_overlap(
-        covering_cells_col(
-            F.col("min_lon"), F.col("min_lat"),
-            F.col("max_lon"), F.col("max_lat"), level,
-        ),
-        F.array(*[F.lit(c) for c in cells]),
+    cover = covering_cells_sql(
+        "min_lon", "min_lat", "max_lon", "max_lat", level
     )
-    out = changesets.where(F.coalesce(coarse, F.lit(False)))
+    out = changesets.where(
+        f"coalesce(arrays_overlap({cover}, "
+        f"array({', '.join(f'{c}L' for c in cells)})), false)"
+    )
     if not exact:
         return out
 
@@ -220,8 +196,6 @@ def aoi_join(
             "*", f"{ax('min_lon')} AS __cxa", f"{ax('max_lon')} AS __cxb",
             f"{ay('min_lat')} AS __cya", f"{ay('max_lat')} AS __cyb",
         )
-        # a NULL bound's index clamps to 0 (greatest skips NULL); the
-        # predicate's NULL guard drops that row after the join
         .selectExpr("*", "explode(sequence(__cxa, __cxb)) AS __x")
         .selectExpr("*", "explode(sequence(__cya, __cyb)) AS __y")
     )

@@ -14,7 +14,7 @@ Plan shape — the textbook cell-bucketed spatial join:
 Choosing the cell level so the cell edge ≥ radius makes the candidate set
 *complete*: any neighbor within radius lies in the point's cell or one of
 its 8 neighbors, so the result is EXACTLY the brute-force answer (the
-DuckDB oracle cross-join) — no approximation. Everything is native Columns:
+DuckDB oracle cross-join) — no approximation. Everything runs in the JVM:
 one shuffle for the equi-join, one for the window; ties broken by
 (dist, right_id) for determinism.
 
@@ -26,14 +26,51 @@ for the same pattern on the raster join).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmcha_spark.geo.cells import (
-    cell_col,
     cell_level_for_radius,
-    covering_cells_col,
+    cell_sql,
+    covering_cells_sql,
 )
+
+# plain multiplication, not pow(x, 2): pow is not guaranteed to be
+# bit-identical to x*x across engines, and the DuckDB oracle must
+# reproduce dist exactly
+_DIST2 = "(lx - rx) * (lx - rx) + (ly - ry) * (ly - ry)"
+
+
+def _double(v: float) -> str:
+    """``v`` as a Spark SQL double literal (a bare ``0.01`` is DECIMAL)."""
+    return f"{float(v)!r}D"
+
+
+def _disc_cells(
+    points: DataFrame, id_col: str, lon_col: str, lat_col: str,
+    radius: float, level: int,
+) -> DataFrame:
+    """(left_id, lx, ly, cell): one row per cell overlapping each point's
+    radius-disc bbox."""
+    r = _double(radius)
+    cover = covering_cells_sql(
+        f"{lon_col} - {r}", f"{lat_col} - {r}",
+        f"{lon_col} + {r}", f"{lat_col} + {r}", level,
+    )
+    return points.selectExpr(
+        f"{id_col} AS left_id", f"{lon_col} AS lx", f"{lat_col} AS ly",
+        f"explode({cover}) AS cell",
+    )
+
+
+def _point_cells(
+    points: DataFrame, lon_col: str, lat_col: str, level: int, *cols: str,
+) -> DataFrame:
+    """(*cols, rx, ry, cell): each point at its one containing cell."""
+    return points.selectExpr(
+        *cols, f"{lon_col} AS rx", f"{lat_col} AS ry",
+        f"{cell_sql(lon_col, lat_col, level)} AS cell",
+    )
 
 
 def knn_join(
@@ -62,47 +99,24 @@ def knn_join(
     # of a fixed 9 (measured 2.4× fewer exploded candidate rows at the
     # bench radius). Still complete: every cell containing an in-radius
     # point overlaps the disc bbox by definition.
-    left = points.select(
-        F.col(id_col).alias("left_id"),
-        F.col(lon_col).alias("lx"),
-        F.col(lat_col).alias("ly"),
-        F.explode(
-            covering_cells_col(
-                F.col(lon_col) - F.lit(radius),
-                F.col(lat_col) - F.lit(radius),
-                F.col(lon_col) + F.lit(radius),
-                F.col(lat_col) + F.lit(radius),
-                level,
-            )
-        ).alias("cell"),
+    left = _disc_cells(points, id_col, lon_col, lat_col, radius, level)
+    right = _point_cells(
+        rights, lon_col, lat_col, level, f"{id_col} AS right_id"
     )
-    right = rights.select(
-        F.col(id_col).alias("right_id"),
-        F.col(lon_col).alias("rx"),
-        F.col(lat_col).alias("ry"),
-        cell_col(F.col(lon_col), F.col(lat_col), level).alias("cell"),
-    )
-
-    # plain multiplication, not pow(x, 2): pow is not guaranteed to be
-    # bit-identical to x*x across engines, and the DuckDB oracle must
-    # reproduce dist exactly
-    dx = F.col("lx") - F.col("rx")
-    dy = F.col("ly") - F.col("ry")
-    dist = F.sqrt(dx * dx + dy * dy)
     pairs = (
         left.join(right, "cell")
-        .where(F.col("left_id") != F.col("right_id"))
-        .select("left_id", "right_id", dist.alias("dist"))
-        .where(F.col("dist") <= radius)
+        .where("left_id != right_id")
+        .selectExpr("left_id", "right_id", f"sqrt({_DIST2}) AS dist")
+        .where(f"dist <= {_double(radius)}")
         # a right point can reach the same left point through ≤9 exploded
         # neighbor cells only once: right's cell is a single value, so no
         # duplicate pairs arise — no distinct needed.
     )
-    w = Window.partitionBy("left_id").orderBy("dist", "right_id")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return pairs.selectExpr(
+        "*",
+        "row_number() OVER (PARTITION BY left_id ORDER BY dist, right_id) "
+        "AS rank",
+    ).where(f"rank <= {int(k)}")
 
 
 def knn_join_adaptive(
@@ -215,25 +229,9 @@ def radius_join(
     beyond AQE's split granularity).
     """
     level = level if level is not None else cell_level_for_radius(radius)
-    left = points.select(
-        F.col(id_col).alias("left_id"),
-        F.col(lon_col).alias("lx"),
-        F.col(lat_col).alias("ly"),
-        F.explode(
-            covering_cells_col(
-                F.col(lon_col) - F.lit(radius),
-                F.col(lat_col) - F.lit(radius),
-                F.col(lon_col) + F.lit(radius),
-                F.col(lat_col) + F.lit(radius),
-                level,
-            )
-        ).alias("cell"),
-    )
-    right = points.select(
-        F.col(id_col).alias("right_id"),
-        F.col(lon_col).alias("rx"),
-        F.col(lat_col).alias("ry"),
-        cell_col(F.col(lon_col), F.col(lat_col), level).alias("cell"),
+    left = _disc_cells(points, id_col, lon_col, lat_col, radius, level)
+    right = _point_cells(
+        points, lon_col, lat_col, level, f"{id_col} AS right_id"
     )
     join_keys = ["cell"]
     if nsalt is not None:
@@ -245,14 +243,11 @@ def radius_join(
             F.explode(F.sequence(F.lit(0).cast("long"), F.lit(nsalt - 1))),
         )
         join_keys = ["cell", "_salt"]
-    dx = F.col("lx") - F.col("rx")
-    dy = F.col("ly") - F.col("ry")
-    dist = F.sqrt(dx * dx + dy * dy)
     return (
         left.join(right, join_keys)
-        .where(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id", dist.alias("dist"))
-        .where(F.col("dist") <= radius)
+        .where("left_id < right_id")
+        .selectExpr("left_id", "right_id", f"sqrt({_DIST2}) AS dist")
+        .where(f"dist <= {_double(radius)}")
     )
 
 
@@ -286,33 +281,12 @@ def radius_anti_join(
     LeftAnti join back to the left table — the full anti-join never
     materializes non-matches. Dense-hotspot skew mitigations are
     radius_join's (AQE split / salting)."""
-    from osmcha_spark.geo.cells import covering_cells_col
-
     level = level if level is not None else cell_level_for_radius(radius)
-    lc = left.select(
-        F.col(id_col).alias("left_id"),
-        F.col(lon_col).alias("lx"),
-        F.col(lat_col).alias("ly"),
-        F.explode(
-            covering_cells_col(
-                F.col(lon_col) - F.lit(radius),
-                F.col(lat_col) - F.lit(radius),
-                F.col(lon_col) + F.lit(radius),
-                F.col(lat_col) + F.lit(radius),
-                level,
-            )
-        ).alias("cell"),
-    )
-    rc = right.select(
-        F.col(lon_col).alias("rx"),
-        F.col(lat_col).alias("ry"),
-        cell_col(F.col(lon_col), F.col(lat_col), level).alias("cell"),
-    )
-    dx = F.col("lx") - F.col("rx")
-    dy = F.col("ly") - F.col("ry")
+    lc = _disc_cells(left, id_col, lon_col, lat_col, radius, level)
+    rc = _point_cells(right, lon_col, lat_col, level)
     matched = (
         lc.join(rc, "cell")
-        .where(dx * dx + dy * dy <= F.lit(float(radius) ** 2))
+        .where(f"{_DIST2} <= {_double(float(radius) ** 2)}")
         .select("left_id")
         .distinct()
     )

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmcha_spark.geo.cells import cell_col, covering_cells_col
+from osmcha_spark.geo.cells import cell_col, covering_cells_sql
 
 
 def _floor_div(c: Column, d: int) -> Column:
@@ -46,16 +46,12 @@ def tiles_with_cells(
 
 
 def changesets_with_cells(changesets: DataFrame, level: int) -> DataFrame:
-    """Explode each bbox into its covering cells: (cell, changeset row)."""
-    return changesets.withColumn(
-        "cell",
-        F.explode(
-            covering_cells_col(
-                F.col("min_lon"), F.col("min_lat"),
-                F.col("max_lon"), F.col("max_lat"), level,
-            )
-        ),
+    """Explode each bbox into its covering cells: (cell, changeset row).
+    A bbox with a NULL bound covers no cell, so it yields no row."""
+    cover = covering_cells_sql(
+        "min_lon", "min_lat", "max_lon", "max_lat", level
     )
+    return changesets.withColumn("cell", F.expr(f"explode({cover})"))
 
 
 def tile_changeset_join(
@@ -206,15 +202,21 @@ def focal_sum(
     focal stage touches ≤ 1M rows regardless of input size. Grid
     coordinates (x, y) are the integer quantization used by the Morton
     key (geo/cells.py spec), and the level-tagged ``cell`` id rides
-    along so the surface joins back to every cell-keyed table.
+    along so the surface joins back to every cell-keyed table. A point
+    with a NULL coordinate has no cell and is dropped up front, so
+    ``x``/``y`` are the non-nullable indices: a nullable ``cell`` join
+    key makes Spark push an inferred ``isnotnull(cell)`` down as one more
+    copy of the whole encoder.
     """
-    from osmcha_spark.geo.cells import _axis_col, _spread_col
+    from osmcha_spark.geo.cells import _clamp_sql, _spread_col
 
     lim = 1 << level
-    x = _axis_col(F.col(lon_col), 180.0, 360.0, level)
-    y = _axis_col(F.col(lat_col), 90.0, 180.0, level)
     counts = (
-        points.select(x.alias("x"), y.alias("y"))
+        points.where(F.col(lon_col).isNotNull() & F.col(lat_col).isNotNull())
+        .selectExpr(
+            f"{_clamp_sql(lon_col, 180.0, 360.0, level)} AS x",
+            f"{_clamp_sql(lat_col, 90.0, 180.0, level)} AS y",
+        )
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("n"))
     )

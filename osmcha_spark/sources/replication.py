@@ -105,8 +105,10 @@ def read_replication_robust(spark: SparkSession, path: str) -> DataFrame:
     malformed XML is one PERMISSIVE corrupt record → ``ParseError``. A
     file the codec cannot read (a truncated gzip) yields no record under
     ``ignoreCorruptFiles``; a content-free ``binaryFile`` listing finds it
-    → ``ReadError``. A gzip missing only its trailer decompresses whole,
-    so its rows are kept here while the strict scan fails on it."""
+    → ``ReadError``. A gzip that lacks only its 8-byte trailer (CRC-32
+    and size) decompresses whole, so all its rows are kept here and
+    nothing is quarantined, while the strict scan fails on it (pinned in
+    tests/test_sources.py)."""
     # binaryFile's ``path`` is the decoded form; the join key is the
     # URL-encoded ``_metadata.file_path`` both scans share
     listing = spark.read.format("binaryFile").load(path).select(

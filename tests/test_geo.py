@@ -25,9 +25,14 @@ LATS = [-89.9, -15.75, 0.0, 44.24, 61.7, 89.9, 90.0, -90.0]
 POINTS = list(zip(LONS, LATS))
 
 
-@pytest.mark.parametrize("level", [0, 4, 8, 12, 16])
+NULL_POINTS = [(None, 0.0), (0.0, None), (None, None)]
+
+
+@pytest.mark.parametrize("level", [0, 4, 8, 12, 16, 20, 24])
 def test_cell_three_way_parity(spark, level):
-    df = spark.createDataFrame(POINTS, "lon double, lat double")
+    """Spark == numpy == DuckDB on every point; a NULL coordinate gives a
+    NULL cell in Spark and DuckDB (numpy takes no NULLs)."""
+    df = spark.createDataFrame(POINTS + NULL_POINTS, "lon double, lat double")
     got_col = [
         r["c"]
         for r in df.select(
@@ -41,7 +46,11 @@ def test_cell_three_way_parity(spark, level):
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE pts AS SELECT * FROM (VALUES "
-        + ",".join(f"({x},{y})" for x, y in POINTS)
+        + ",".join(
+            f"({'NULL' if x is None else x}::DOUBLE, "
+            f"{'NULL' if y is None else y}::DOUBLE)"
+            for x, y in POINTS + NULL_POINTS
+        )
         + ") t(lon, lat)"
     )
     got_sql = [
@@ -50,7 +59,9 @@ def test_cell_three_way_parity(spark, level):
             f"SELECT {cell_sql('lon', 'lat', level)} FROM pts"
         ).fetchall()
     ]
-    assert got_col == got_np == got_sql
+    nulls = [None] * len(NULL_POINTS)
+    assert got_col == got_np + nulls
+    assert got_sql == got_np + nulls
 
 
 def test_cell_levels_disjoint(spark):
@@ -81,6 +92,128 @@ def test_covering_cells_and_neighbors(spark):
     ).collect()[0]["n"]
     assert c0 in nb
     assert 4 <= len(nb) <= 9
+
+
+def _interleave(x: int, y: int) -> int:
+    return sum(
+        ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
+        for i in range(24)
+    )
+
+
+def _polyfill_ref(bbox, level):
+    """numpy polyfill of a bbox: the clamped index ranges, x-major, each
+    cell interleaved bit by bit."""
+    lim = 1 << level
+
+    def ax(v, off, span):
+        return int(np.clip(np.floor((v + off) / span * lim), 0, lim - 1))
+
+    a, b, c, d = bbox
+    return [
+        _interleave(x, y) | (level << 56)
+        for x in range(ax(a, 180.0, 360.0), ax(c, 180.0, 360.0) + 1)
+        for y in range(ax(b, 90.0, 180.0), ax(d, 90.0, 180.0) + 1)
+    ]
+
+
+@pytest.mark.parametrize("level", [0, 7, 14, 24])
+def test_covering_cells_matches_numpy_polyfill(spark, level):
+    """Multi-cell bboxes, bboxes clamped at ±180/±90 and a point bbox
+    polyfill to the numpy reference, cell for cell and in order; a bbox
+    with a NULL bound covers nothing (NULL)."""
+    w, h = 360.0 / (1 << level), 180.0 / (1 << level)
+    boxes = [
+        (-71.06, 44.23, -71.06 + 2.5 * w, 44.23 + 1.5 * h),
+        (13.37, -15.75, 13.37 + 0.4 * w, -15.75 + 3.2 * h),
+        (180.0 - 1.5 * w, 90.0 - 2.5 * h, 181.0, 91.0),
+        (-181.0, -91.0, -180.0 + 1.5 * w, -90.0 + 0.5 * h),
+        (-190.0, 10.0, -180.0 + 0.2 * w, 10.0),
+        (0.0, 0.0, 0.0, 0.0),
+    ]
+    nulls = [(None, 0.0, 1.0, 1.0), (0.0, 0.0, 1.0, None),
+             (None, None, None, None)]
+    df = spark.createDataFrame(
+        boxes + nulls,
+        "min_lon double, min_lat double, max_lon double, max_lat double",
+    ).coalesce(1)
+    got = [
+        r[0] for r in df.select(covering_cells_col(
+            F.col("min_lon"), F.col("min_lat"),
+            F.col("max_lon"), F.col("max_lat"), level,
+        )).collect()
+    ]
+    want = [_polyfill_ref(b, level) for b in boxes]
+    assert got == want + [None] * len(nulls)
+    if level:
+        assert max(len(c) for c in want) > 1
+
+
+@pytest.mark.parametrize("level", [16, 17, 20, 24])
+def test_aoi_covering_cells_past_level_16(level):
+    """The driver-side AOI polyfill (``filter_by_aoi``'s coarse set) is
+    the numpy reference at every level; a 16-bit spread lost every cell
+    from level 17 on."""
+    from osmcha_spark.operators.aoi import aoi_covering_cells
+
+    w = 2.5 * 360.0 / (1 << level)
+    a, b = -71.06, 44.23
+    ring = [(a, b), (a + w, b), (a + w, b + w), (a, b)]
+    assert aoi_covering_cells(ring, level) == _polyfill_ref(
+        (a, b, a + w, b + w), level)
+
+
+def test_null_coordinates_give_no_cells(spark):
+    """Level 4: a NULL coordinate gives a NULL cell and a NULL polyfill in
+    Spark and in DuckDB's polyfill size, and a changeset whose bbox has a
+    NULL bound gets no cell row (it used to land in the corner cell
+    ``4 << 56``, or span 9 cells from index 0)."""
+    from osmcha_spark.geo.cells import covering_cells_count_sql
+    from osmcha_spark.operators.tiles import changesets_with_cells
+
+    rows = [(1, None, None, None, None), (2, 0.5, None, 0.6, 0.6),
+            (3, 0.5, 0.5, 0.6, 0.6)]
+    schema = ("id long, min_lon double, min_lat double, "
+              "max_lon double, max_lat double")
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    got = df.select(
+        cell_col(F.col("min_lon"), F.col("min_lat"), 4).alias("c"),
+        covering_cells_col(
+            "min_lon", "min_lat", "max_lon", "max_lat", 4).alias("cov"),
+        neighbors_col("min_lon", "min_lat", 4).alias("nb"),
+    ).collect()
+    c3 = int(cell_np(np.array([0.5]), np.array([0.5]), 4)[0])
+    assert [r.c for r in got] == [None, None, c3]
+    assert [r.cov for r in got] == [None, None, [c3]]
+    assert [r.nb is None for r in got] == [True, True, False]
+    assert [(r.id, r.cell) for r in changesets_with_cells(df, 4).collect()
+            ] == [(3, c3)]
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE cs AS SELECT * FROM (VALUES (1, NULL::DOUBLE, "
+        "NULL::DOUBLE, NULL::DOUBLE, NULL::DOUBLE), (2, 0.5, NULL, 0.6, 0.6),"
+        " (3, 0.5, 0.5, 0.6, 0.6)) t(id, min_lon, min_lat, max_lon, max_lat)"
+    )
+    n = covering_cells_count_sql("min_lon", "min_lat", "max_lon", "max_lat", 4)
+    assert con.execute(
+        f"SELECT {cell_sql('min_lon', 'min_lat', 4)}, {n} FROM cs ORDER BY id"
+    ).fetchall() == [(None, None), (None, None), (c3, 1)]
+
+
+def test_cell_col_takes_names_sql_or_bare_columns(spark):
+    """A column name, a SQL string and a bare column reference give the
+    same cell; a computed Column is refused with a pointer to the string
+    form."""
+    df = spark.createDataFrame([(-71.06, 44.23)], "lon double, lat double")
+    got = df.select(
+        cell_col("lon", "lat", 9),
+        cell_col(F.col("lon"), F.col("lat"), 9),
+        cell_col("lon + 0.0D", "`lat`", 9),
+    ).first()
+    assert len(set(got)) == 1
+    with pytest.raises(TypeError, match="SQL string"):
+        cell_col(F.col("lon") + 1, F.col("lat"), 9)
 
 
 def test_pip_conventions(spark):

@@ -77,8 +77,7 @@ def test_clustered_aoi_scan_prunes_and_matches(spark, tmp_path):
     with_cell = cs.withColumn(
         "cell",
         cell_col(
-            (F.col("min_lon") + F.col("max_lon")) / 2,
-            (F.col("min_lat") + F.col("max_lat")) / 2,
+            "(min_lon + max_lon) / 2", "(min_lat + max_lat) / 2",
             fine,
         ),
     )

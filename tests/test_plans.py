@@ -198,6 +198,53 @@ def test_knn_is_pure_column(spark):
     assert "ArrowEvalPython" not in plan
 
 
+def _jvm_calls(build) -> int:
+    """Driver→JVM calls (py4j commands) this thread sends while ``build``
+    runs; the py4j finalizer thread's object releases are not counted."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    me, n = threading.get_ident(), [0]
+    send = GatewayClient.send_command
+
+    def counted(self, *a, **k):
+        if threading.get_ident() == me:
+            n[0] += 1
+        return send(self, *a, **k)
+
+    GatewayClient.send_command = counted
+    try:
+        build()
+    finally:
+        GatewayClient.send_command = send
+    return n[0]
+
+
+def test_cell_plans_build_in_few_jvm_calls(spark):
+    """Cell keys are built as one SQL text each, so a plan costs tens of
+    driver→JVM calls (0.3–1 ms each), not one per expression node (a
+    Column-DSL ``cell_col`` took 522, ``covering_cells_col`` 887 and
+    ``knn_join`` over 2,000). Counts, not timings; each is the second
+    build, after the first has warmed py4j's lookups."""
+    from osmcha_spark.geo.cells import cell_col, covering_cells_col
+    from osmcha_spark.operators.knn import knn_join
+
+    pts = spark.range(10).selectExpr(
+        "id", "CAST(id AS DOUBLE) AS lon", "CAST(id AS DOUBLE) AS lat")
+    builds = {
+        "cell_col": (40, lambda: cell_col(F.col("lon"), F.col("lat"), 7)),
+        "covering_cells_col": (80, lambda: covering_cells_col(
+            F.col("min_lon"), F.col("min_lat"),
+            F.col("max_lon"), F.col("max_lat"), 7)),
+        "knn_join": (400, lambda: knn_join(pts, k=3, radius=0.01)),
+    }
+    for name, (limit, build) in builds.items():
+        build()
+        calls = _jvm_calls(build)
+        assert calls <= limit, f"{name}: {calls} JVM calls > {limit}"
+
+
 def test_as_of_join_plan_is_single_window(spark):
     """The as-of join must plan as union + ONE Window pass — no
     nested-loop/cartesian join and no Python eval (q42's 100 TB shape)."""

@@ -86,6 +86,27 @@ def test_each_corruption_fails_strict_and_quarantines_robust(
     assert sum(r.parse_error is None for r in robust) == 25
 
 
+def test_gzip_missing_trailer_kept_robust_fails_strict(
+        spark, tmp_path, replication_gz):
+    """A gzip that lacks only its 8-byte trailer (CRC-32 and size)
+    decompresses whole: the robust scan keeps all its rows and
+    quarantines nothing, while the strict scan fails on it."""
+    with open(replication_gz, "rb") as fh:
+        good = fh.read()
+    d = tmp_path / "repl"
+    d.mkdir()
+    (d / "000.osm.gz").write_bytes(good)
+    (d / "001.osm.gz").write_bytes(good[:-8])
+    with pytest.raises(Exception):
+        read_replication(spark, str(d)).collect()
+
+    robust = read_replication_robust(spark, str(d)).collect()
+    assert [r for r in robust if r.parse_error is not None] == []
+    assert len(robust) == 50
+    assert {r.src_file.rsplit("/", 1)[-1] for r in robust} == {
+        "000.osm.gz", "001.osm.gz"}
+
+
 # Reader traps, in one file: spaces around values, a repeated tag key,
 # tag keys named after attributes, a tag without k, a <discussion> child
 # (not a <tag>), a changeset with no tags and no bbox.

@@ -514,8 +514,7 @@ def main() -> None:
     cs_cells = spark.sql(synth.changesets_sql(synth.SPARK)).withColumn(
         "cell",
         cell_col(
-            (F.col("min_lon") + F.col("max_lon")) / 2,
-            (F.col("min_lat") + F.col("max_lat")) / 2,
+            "(min_lon + max_lon) / 2", "(min_lat + max_lat) / 2",
             12,
         ),
     )

@@ -2630,22 +2630,22 @@ GROUP BY CUBE (event_type, user_id % 10)
 # --------------------------------------------------------------- q58
 
 def q58_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The table-scale upsert WRITE path (operators/incremental.py:
-    upsert_partitioned — VERDICT r2 item 1, previously prose-only): a
-    prior snapshot written partitioned by ``part = id % 4``, then a fresh
-    batch touching ONLY partition 1 (ids ≡ 1 mod 8) merged in with
-    dynamic partition overwrite. The gate asserts BOTH halves of the
-    contract: (a) post-merge contents equal the oracle's stated truth —
-    fresh values where the batch touched, stale elsewhere; (b) the three
-    untouched partitions' data files are BYTE-IDENTICAL across the merge
-    (size+md5 manifest compared before/after; a full-table rewrite or a
-    static overwrite would fail it), which is what bounds the merge cost
-    at 100 TB."""
+    """The table-scale upsert WRITE path (sources/tables.py:
+    snapshot_upsert — VERDICT r2 item 1, previously prose-only): a
+    prior snapshot table partitioned by ``part = id % 4``, then a fresh
+    batch touching ONLY partition 1 (ids ≡ 1 mod 8) merged in by one
+    copy-on-write commit. The gate asserts BOTH halves of the contract:
+    (a) post-merge contents equal the oracle's stated truth — fresh
+    values where the batch touched, stale elsewhere; (b) the three
+    untouched partitions keep the SAME manifest entries with
+    BYTE-IDENTICAL data files across the merge (name+size+md5 compared
+    before/after; a full-table rewrite would fail it), which is what
+    bounds the merge cost at 100 TB."""
     _ensure(spark, sf_dir)
     import hashlib
 
-    from osmcha_spark.operators.incremental import upsert_partitioned
     from osmcha_spark.plans.analyse import normalize_changesets
+    from osmcha_spark.sources import tables as T
 
     work = _work_dir("q58")
     snap = os.path.join(work, "snapshot")
@@ -2660,40 +2660,35 @@ def q58_partitioned_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("prior").alias("src"),
         part,
     )
-    prior.write.partitionBy("part").parquet(snap)
+    T.snapshot_create(prior, snap, partition_col="part")
 
-    def _manifest(only_untouched: bool) -> dict[str, tuple[int, str]]:
+    def _manifest() -> dict[str, tuple[int, str]]:
         out: dict[str, tuple[int, str]] = {}
-        for root, _, files in os.walk(snap):
-            if only_untouched and "part=1" in root:
+        for f in T.snapshot_files(snap):
+            if f["partition"] == "1":
                 continue
-            for fn in files:
-                if not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, fn)
-                with open(p, "rb") as fh:
-                    blob = fh.read()
-                out[os.path.relpath(p, snap)] = (
-                    len(blob), hashlib.md5(blob).hexdigest()
-                )
+            with open(os.path.join(T._data_dir(snap), f["name"]),
+                      "rb") as fh:
+                blob = fh.read()
+            out[f["name"]] = (len(blob), hashlib.md5(blob).hexdigest())
         return out
 
-    before = _manifest(only_untouched=True)
+    before = _manifest()
 
     updates = fresh.where(F.col("id") % 8 == 1).select(
         "id", "editor", "comment", "comments_count",
         F.lit("fresh").alias("src"),
         part,
     )
-    upsert_partitioned(updates, snap, key="id", partition_col="part")
+    T.snapshot_upsert(updates, snap, key="id")
 
-    after = _manifest(only_untouched=True)
+    after = _manifest()
     if before != after:
         raise RuntimeError(
             "untouched partitions were rewritten by the merge: "
             f"{sorted(set(before) ^ set(after))[:5]}"
         )
-    return spark.read.parquet(snap).select(
+    return T.read_snapshot(spark, snap).select(
         "id", "editor", "comment", "comments_count", "src",
         F.col("part").cast("int").alias("part"),
     )
@@ -4863,10 +4858,10 @@ FROM agg a JOIN firsts f ON f.key = a.key
 
 def q96_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous merge (streaming/ingest.py:stream_upsert): a stale
-    snapshot (every cents = −1) partitioned by event_type is kept
+    snapshot table (every cents = −1) partitioned by event_type is kept
     current by a stream of re-analysed rows via foreachBatch →
-    upsert_partitioned — q58's dynamic-partition-overwrite merge,
-    incrementalized. Two KEY-DISJOINT batch files (ids ≡1 and ≡2 mod 3,
+    snapshot_upsert — q58's copy-on-write merge, one commit per
+    micro-batch. Two KEY-DISJOINT batch files (ids ≡1 and ≡2 mod 3,
     so file-pickup order cannot change the result) refresh two thirds
     of the keys; ids ≡0 mod 3 keep the stale marker. The oracle states
     the post-merge truth directly (the q52 pattern). Restart-resume and
@@ -4876,6 +4871,7 @@ def q96_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import shutil
 
+    from osmcha_spark.sources import tables as T
     from osmcha_spark.streaming import stream_upsert
 
     work = _work_dir("q96")
@@ -4887,9 +4883,11 @@ def q96_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    ev.select(
-        "event_id", "event_type", F.lit(-1).cast("long").alias("cents")
-    ).write.partitionBy("event_type").parquet(table)
+    T.snapshot_create(
+        ev.select("event_id", "event_type",
+                  F.lit(-1).cast("long").alias("cents")),
+        table, partition_col="event_type",
+    )
 
     for i, frag in enumerate([
         ev.where(F.col("event_id") % 3 == 1),
@@ -4912,7 +4910,7 @@ def q96_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_dir=os.path.join(work, "ckpt"),
     )
     q.awaitTermination()
-    return spark.read.parquet(table).select(
+    return T.read_snapshot(spark, table).select(
         "event_id", "event_type", "cents"
     )
 
@@ -5456,24 +5454,23 @@ def q105_stream_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained tile pyramid (streaming/ingest.py:
     stream_pyramid): the points table replayed as three micro-batches
     (ids ≡0/1/2 mod 3, one file per trigger) folds each batch's delta
-    pyramid into a VERSIONED pyramid table — v_<batch_id> dirs plus an
-    atomically-replaced _CURRENT pointer, the snapshot-commit protocol
-    that makes additive merges replay-safe (apply_pyramid_batch
-    docstring; crash windows pytest-gated). The final committed version
-    must equal the from-scratch pyramid over ALL points — q43's
+    pyramid into a level-partitioned snapshot table keyed on cell — one
+    commit per batch stamped with its batch id, which makes additive
+    merges replay-safe (apply_pyramid_batch docstring; crash windows
+    pytest-gated). The final committed snapshot must equal the from-scratch pyramid over ALL points — q43's
     recompute-from-raw oracle, now reached through three incremental
     commits instead of one batch job."""
     _ensure(spark, sf_dir)
     import glob as _glob
     import shutil
 
-    from osmcha_spark.streaming import read_pyramid, stream_pyramid
+    from osmcha_spark.sources import tables as T
+    from osmcha_spark.streaming import stream_pyramid
 
     work = _work_dir("q105")
     in_dir = os.path.join(work, "in")
     table = os.path.join(work, "pyramid")
     os.makedirs(in_dir)
-    os.makedirs(table)
 
     pts = spark.sql(synth.points_sql(synth.SPARK))
     for i in range(3):
@@ -5492,7 +5489,7 @@ def q105_stream_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_dir=os.path.join(work, "ckpt"),
     )
     q.awaitTermination()
-    return read_pyramid(spark, table).select("level", "cell", "n")
+    return T.read_snapshot(spark, table).select("level", "cell", "n")
 
 
 # --------------------------------------------------------------- q106
@@ -5706,24 +5703,22 @@ SELECT node_id, CAST(min(hops) AS INT) AS hops FROM reach GROUP BY node_id
 # --------------------------------------------------------------- q109
 
 def q109_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction with bounded rewrites (operators/
-    incremental.py:compact_partitioned): a snapshot partitioned by
-    ``part = id % 4`` with partitions 0-2 deliberately fragmented into
-    ~8 files each (the streaming-ingest aftermath) and partition 3
-    written compact. The gate asserts the full contract in-query:
-    (a) fragmented partitions collapse to exactly their bin count (1
-    here); (b) the already-compact partition's files are BYTE-IDENTICAL
-    across the run (q58's size+md5 manifest discipline — compaction
-    never touches what it doesn't need to); (c) contents are carried
-    row-for-row — the oracle is the table's own definition."""
+    """Small-file compaction with bounded rewrites (sources/tables.py:
+    snapshot_compact): a snapshot table partitioned by ``part = id % 4``
+    with partitions 0-2 deliberately fragmented into ~8 files each (the
+    streaming-ingest aftermath) and partition 3 appended compact. The
+    gate asserts the full contract in-query: (a) fragmented partitions
+    collapse to exactly their bin count (1 here); (b) the
+    already-compact partition keeps its manifest entry and its file
+    stays BYTE-IDENTICAL across the run (q58's name+size+md5 manifest
+    discipline — compaction never touches what it doesn't need to);
+    (c) contents are carried row-for-row — the oracle is the table's
+    own definition."""
     _ensure(spark, sf_dir)
     import hashlib
 
-    from osmcha_spark.operators.incremental import (
-        _partition_files,
-        compact_partitioned,
-    )
     from osmcha_spark.plans.analyse import normalize_changesets
+    from osmcha_spark.sources import tables as T
 
     work = _work_dir("q109")
     snap = os.path.join(work, "snapshot")
@@ -5732,29 +5727,31 @@ def q109_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id", "editor", "comment", "comments_count",
         F.pmod(F.col("id"), F.lit(4)).cast("int").alias("part"),
     )
-    rows.where(F.col("part") < 3).repartition(8).write.partitionBy(
-        "part"
-    ).parquet(snap)
-    rows.where(F.col("part") == 3).coalesce(1).write.mode(
-        "append"
-    ).partitionBy("part").parquet(snap)
+    T.snapshot_create(rows.where(F.col("part") < 3).repartition(8), snap,
+                      partition_col="part")
+    T.snapshot_append(rows.where(F.col("part") == 3).coalesce(1), snap)
 
-    def _manifest() -> dict:
-        return {
-            f: (sz, hashlib.md5(open(f, "rb").read()).hexdigest())
-            for f, sz in _partition_files(snap, "part").get("3", [])
-        }
+    def _files(part: str) -> dict:
+        out = {}
+        for f in T.snapshot_files(snap):
+            if f["partition"] == part:
+                with open(os.path.join(T._data_dir(snap), f["name"]),
+                          "rb") as fh:
+                    blob = fh.read()
+                out[f["name"]] = (len(blob), hashlib.md5(blob).hexdigest())
+        return out
 
-    before = _manifest()
-    stats = compact_partitioned(
-        spark, snap, "part", target_bytes=1 << 30
-    )
-    if _manifest() != before:
+    before = _files("3")
+    if T.snapshot_compact(spark, snap, target_bytes=1 << 30) is None:
+        raise RuntimeError("compaction planned nothing")
+    if _files("3") != before:
         raise RuntimeError("compaction rewrote the already-compact "
                            "partition 3")
-    if stats["partitions_compacted"] != 3 or stats["files_after"] != 3:
-        raise RuntimeError(f"expected 3 partitions -> 1 file each: {stats}")
-    return spark.read.parquet(snap).select(
+    per_part = [len(_files(p)) for p in ("0", "1", "2")]
+    if per_part != [1, 1, 1]:
+        raise RuntimeError(f"expected 3 partitions -> 1 file each: "
+                           f"{per_part}")
+    return T.read_snapshot(spark, snap).select(
         "id", "editor", "comment", "comments_count",
         F.col("part").cast("int").alias("part"),
     )
@@ -5774,11 +5771,12 @@ FROM fresh
 def q110_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance (operators/similarity.py:
     ivf_index_build/append/search): build the stored IVF layout —
-    inverted lists as centroid_id partition dirs + a sibling codebook —
-    from the vectors with vec_id % 3 != 0, then APPEND the % 3 == 0
-    batch: new vectors assign against the STORED (immutable) quantizer
-    and upsert into only the lists they land in. The gate asserts the
-    q58 byte-identity contract on every untouched list in-query, then
+    inverted lists as a centroid_id-partitioned snapshot table + a
+    sibling codebook — from the vectors with vec_id % 3 != 0, then
+    APPEND the % 3 == 0 batch: new vectors assign against the STORED
+    (immutable) quantizer and upsert into only the lists they land in.
+    The gate asserts the q58 byte-identity contract on every untouched
+    list's manifest entries in-query, then
     serves nprobe=2 top-5 from the maintained index. The oracle is the
     from-scratch truth with the SAME codebook (centroids = vec_id % 25
     = 0 AND % 3 != 0 — append must never re-train the quantizer, or
@@ -5793,6 +5791,7 @@ def q110_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_build,
         ivf_index_search,
     )
+    from osmcha_spark.sources import tables as T
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     work = _work_dir("q110")
@@ -5810,20 +5809,14 @@ def q110_ivf_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _manifest() -> dict:
         out = {}
-        lists_dir = os.path.join(idx, "lists")
-        for root, _d, files in os.walk(lists_dir):
-            base = os.path.basename(root)
-            if not base.startswith("centroid_id="):
+        lists = os.path.join(idx, "lists")
+        for f in T.snapshot_files(lists):
+            if int(f["partition"]) in touched:
                 continue
-            if int(base.split("=")[1]) in touched:
-                continue
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    p = os.path.join(root, fn)
-                    blob = open(p, "rb").read()
-                    out[os.path.relpath(p, lists_dir)] = (
-                        len(blob), hashlib.md5(blob).hexdigest()
-                    )
+            with open(os.path.join(T._data_dir(lists), f["name"]),
+                      "rb") as fh:
+                blob = fh.read()
+            out[f["name"]] = (len(blob), hashlib.md5(blob).hexdigest())
         return out
 
     before = _manifest()

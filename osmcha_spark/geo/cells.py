@@ -295,7 +295,9 @@ def cell_ranges_for_rect(
     merge. Driver-side on purpose: AOIs are metadata-scale, and literal
     ranges are statically pushed into the parquet scan (footer min/max
     row-group pruning, measured in tests/test_layout.py) — the same
-    static-beats-dynamic pruning choice as upsert_partitioned.
+    static-beats-dynamic pruning choice as a literal ``isin`` partition
+    filter (measured: a semi-join gets no dynamic pruning locally; pinned
+    by tests/test_plans.py::test_upsert_partitioned_scan_prunes_partitions).
 
     Axis indices clamp exactly like ``cell_col`` does, so padding a rect
     past ±180/±90 is safe and the ranges stay a superset of every

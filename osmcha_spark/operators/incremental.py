@@ -4,13 +4,16 @@ re-fetched and re-scored as they are edited; osmcha-django overwrites the
 stored verdict row) expressed as a set operation.
 
 Scale shape (100 TB): ONE shuffle — the anti-join on the key — plus a
-union that is a pure plan concatenation. On partitioned storage the same
-merge runs per affected partition with dynamic partition overwrite
-(:func:`upsert_partitioned`): a minutely replication batch rewrites only
-the partitions it touches — at table scale the WRITE is the merge cost,
-and bounding it to touched partitions is what makes minutely merges into
-a 100 TB snapshot affordable. Table formats (Iceberg/Delta MERGE INTO)
-compile to this exact join + partition-scoped-overwrite shape underneath.
+union that is a pure plan concatenation. On stored tables the same merge
+runs per affected partition inside the snapshot table's copy-on-write
+upsert (sources/tables.py:snapshot_upsert): a minutely replication batch
+rewrites only the partitions it touches and carries every other file by
+reference — at table scale the WRITE is the merge cost, and bounding it
+to touched partitions is what makes minutely merges into a 100 TB
+snapshot affordable. Table formats (Iceberg/Delta MERGE INTO) compile to
+this exact join + partition-scoped-rewrite shape underneath. The
+incremental views (:func:`mv_sync`, :func:`join_mv_sync`) are maintained
+through the same commits.
 """
 
 from __future__ import annotations
@@ -61,63 +64,6 @@ def upsert(
     return updates.unionByName(keep)
 
 
-def upsert_partitioned(
-    updates: DataFrame,
-    path: str,
-    key: str,
-    partition_col: str,
-    version_col: str | None = None,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Merge ``updates`` into the partitioned parquet snapshot at ``path``,
-    rewriting ONLY the partitions the batch touches (the write path the
-    module docstring promises — dynamic partition overwrite made real).
-
-    Plan: (1) restrict the prior snapshot to affected partitions with a
-    literal ``IN`` filter on ``partition_col`` built from the batch's
-    distinct partition values — a metadata-scale collect (the operator is
-    already an action: it writes), and unlike a semi-join it GUARANTEES
-    partition pruning in the scan (``PartitionFilters: part IN (…)``,
-    pinned by tests/test_plans.py; measured: the bare semi-join form gets
-    no dynamic pruning locally), so untouched partitions are never READ;
-    (2) the same anti-join + union merge as :func:`upsert`; (3) write
-    with ``partitionOverwriteMode=dynamic``, which replaces exactly the
-    partitions present in the merged frame and leaves every other
-    partition's files byte-untouched (gated by q58: untouched partition
-    files are asserted byte-identical across the merge).
-
-    The merged frame is checkpointed before the write because it reads
-    from the same files the write replaces (Spark otherwise refuses the
-    self-overwrite, and lazily re-reading mid-overwrite would corrupt).
-    Default is ``localCheckpoint`` (executor-local, fastest); pass
-    ``checkpoint_dir`` for a reliable checkpoint on shared storage — same
-    durability tradeoff as knn_join_adaptive. The checkpoint is bounded:
-    it holds only the AFFECTED partitions' rows, not the table.
-
-    ``updates`` must carry ``partition_col`` (derive it the same way the
-    snapshot writer did); key-uniqueness per the :func:`upsert`
-    precondition, enforceable via ``version_col``.
-    """
-    spark = updates.sparkSession
-    prior = spark.read.parquet(path)
-    affected_vals = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    prior_affected = prior.where(F.col(partition_col).isin(affected_vals))
-    merged = upsert(prior_affected, updates, key, version_col=version_col)
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        merged = merged.checkpoint()
-    else:
-        merged = merged.localCheckpoint()
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
 def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
@@ -137,8 +83,9 @@ def snapshot_diff(
     Scale shape (100 TB): ONE full-outer shuffled equi-join on the key
     — both snapshots exchange once, the status projection is free. The
     output is typically ≪ either snapshot (that's the point), so the
-    downstream upsert (:func:`upsert` / :func:`upsert_partitioned`)
-    runs on the delta, and with both snapshots stored bucketed on the
+    downstream upsert (:func:`upsert` /
+    :func:`~osmcha_spark.sources.tables.snapshot_upsert`) runs on the
+    delta, and with both snapshots stored bucketed on the
     key (operators/bucketed.py) even the one exchange disappears.
 
     PRECONDITION: both snapshots key-unique (snapshots, not logs —
@@ -176,129 +123,6 @@ def snapshot_diff(
         j.select(*key_cols, status.alias("change"))
         .where(F.col("change").isNotNull())
     )
-
-
-def _partition_files(path: str, partition_col: str) -> dict[str, list]:
-    """Driver-side metadata listing: partition-value string → list of
-    (file_path, bytes) for every data file in its ``part=val`` dir.
-    Local-FS walk here; on a cluster the same listing comes from the
-    Hadoop FileSystem API (or the table format's manifest) — either way
-    it is O(#files) METADATA, never data."""
-    import os as _os
-
-    out: dict[str, list] = {}
-    prefix = f"{partition_col}="
-    for root, _dirs, files in _os.walk(path):
-        base = _os.path.basename(root)
-        if not base.startswith(prefix):
-            continue
-        val = base[len(prefix):]
-        for fn in files:
-            if fn.endswith(".parquet"):
-                p = _os.path.join(root, fn)
-                out.setdefault(val, []).append((p, _os.path.getsize(p)))
-    return out
-
-
-def compact_partitioned(
-    spark,
-    path: str,
-    partition_col: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    checkpoint_dir: str | None = None,
-) -> dict:
-    """Small-file compaction with bounded rewrites — the storage
-    maintenance that keeps a streaming-ingested table scannable: minutely
-    micro-batches (streaming/ingest.py) each append a file per partition,
-    and a month later every scan pays thousands-of-files listing + open
-    overhead per partition. Compaction bin-packs each fragmented
-    partition back to ``ceil(partition_bytes / target_bytes)`` files.
-
-    Bounded exactly like :func:`upsert_partitioned`: a partition is
-    AFFECTED only when its file count exceeds its bin count AND at least
-    two of its files are genuinely SMALL (< target/2 — the same
-    small-file threshold family as Iceberg's binpack rewriter). The
-    small-file guard is what makes compaction IDEMPOTENT: a written bin
-    averages ``total/ceil(total/target) ≥ target/2`` by arithmetic, so
-    freshly compacted files can never re-qualify even though they
-    compress smaller than the fragments they replaced — a bare
-    count-vs-recomputed-bins rule would re-plan fewer bins on the very
-    next run and rewrite forever (pytest-pinned). Affected
-    partitions are read via a literal ``IN`` filter (guaranteed static
-    pruning), checkpointed (the write replaces the files the plan reads),
-    and rewritten with dynamic partition overwrite; every already-compact
-    partition's files stay byte-identical (q109 gates this with the q58
-    size+md5 manifest), and a second run is a no-op. Content is carried
-    row-for-row — the oracle is the table's own definition.
-
-    Bin assignment is ``pmod(xxhash64(<row>), n_bins)`` per partition
-    (deterministic, no RNG), and the shuffle lands on
-    ``(partition_col, bin)`` with 4× slack partitions so distinct bins
-    rarely share a task; when they do, the writer merges them into one
-    (still ≥ 1, never > requested) file — a fewer-files outcome, never a
-    correctness one. For the dominant n_bins == 1 case the output is
-    EXACTLY one file per partition regardless of hash collisions, since
-    the parquet writer splits by partition value within a task.
-
-    Returns a stats dict (partitions_compacted, files_before/after over
-    the affected set, bins_planned) — metadata-scale, like the listing.
-    """
-    import math
-
-    listing = _partition_files(path, partition_col)
-    plan: dict[str, int] = {}
-    files_before = 0
-    for val, files in listing.items():
-        total = sum(sz for _, sz in files)
-        n_bins = max(1, math.ceil(total / target_bytes))
-        n_small = sum(1 for _, sz in files if sz < target_bytes // 2)
-        if len(files) > n_bins and n_small >= 2:
-            plan[val] = n_bins
-            files_before += len(files)
-    if not plan:
-        return {"partitions_compacted": 0, "files_before": 0,
-                "files_after": 0, "bins_planned": 0}
-
-    table = spark.read.parquet(path)
-    ptype = dict(table.dtypes)[partition_col]
-    def _coerce(v: str):
-        return int(v) if ptype in ("int", "bigint", "smallint",
-                                   "tinyint") else v
-    vals = [_coerce(v) for v in plan]
-    affected = table.where(F.col(partition_col).isin(vals))
-
-    data_cols = [c for c in table.columns if c != partition_col]
-    bins_map = F.create_map(
-        *[x for v, n in plan.items()
-          for x in (F.lit(_coerce(v)), F.lit(n))]
-    )
-    n_bins_col = F.element_at(bins_map, F.col(partition_col))
-    total_bins = sum(plan.values())
-    binned = affected.withColumn(
-        "__bin",
-        F.pmod(F.xxhash64(*[F.col(c) for c in data_cols]), n_bins_col),
-    ).repartition(max(32, 4 * total_bins),
-                  F.col(partition_col), F.col("__bin"))
-    out = binned.drop("__bin")
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        out = out.checkpoint()
-    else:
-        out = out.localCheckpoint()
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-    after_listing = _partition_files(path, partition_col)
-    files_after = sum(len(after_listing.get(v, [])) for v in plan)
-    return {
-        "partitions_compacted": len(plan),
-        "files_before": files_before,
-        "files_after": files_after,
-        "bins_planned": total_bins,
-    }
 
 
 def apply_changes(
@@ -349,11 +173,12 @@ def mv_sync(
     O(appended bytes + touched groups), never a base rescan.
 
     MV schema: ``(group_col, n_rows, sum_<value_col>)``, partitioned by
-    ``group_col``. The applied frontier (base snapshot id) is recorded
-    as an MV tag ``sync-<base_sid>`` and every incremental commit
-    carries ``commit_id="sync-<base_sid>"`` — replays repoint instead
-    of double-counting (exactly-once at the table level), and the
-    frontier survives expiry because tags pin manifests.
+    ``group_col``. Every commit carries ``commit_id="sync-<base_sid>"``
+    and that id IS the applied frontier (read back from the MV's
+    current manifest, atomic with the commit) — replays repoint instead
+    of double-counting (exactly-once at the table level), and no crash
+    between the commit and its ``sync-<base_sid>`` tag (a label that
+    also pins the manifest against expiry) can lose the frontier.
 
     Returns the new MV snapshot id, or None when already up to date.
     A rewrite/compaction/delete on the base inside the sync window
@@ -380,14 +205,6 @@ def mv_sync(
         T.snapshot_tag(mv_path, f"sync-{cur}")
         return T.current_snapshot(mv_path)
 
-    frontier = max(
-        (int(n[5:]) for n in T.list_tags(mv_path)
-         if n.startswith("sync-")),
-        default=None,
-    )
-    if frontier is None:
-        raise ValueError(f"{mv_path} has no sync-* frontier tag: not a "
-                         "mv_sync-maintained view")
     done = T._find_commit(mv_path, f"sync-{cur}")
     if done is not None:
         # this base snapshot was already folded in; heal a lost
@@ -397,8 +214,11 @@ def mv_sync(
             T._point_current(mv_path, done)
             return done
         return None
-    if frontier == cur:
-        return None
+    front = T._applied_frontier(mv_path, "sync", 1)
+    if front is None:
+        raise ValueError(f"{mv_path} has no sync-* commit: not a "
+                         "mv_sync-maintained view")
+    frontier = front[0]
     delta = T.snapshot_changes(spark, base_path, frontier, cur)
     delta_agg = _agg(delta)
     mv = T.read_snapshot(spark, mv_path)
@@ -439,20 +259,23 @@ def join_mv_sync(
     ONE :func:`~osmcha_spark.sources.tables.snapshot_append` of the
     delta — never a rewrite.
 
-    The applied frontier is the PAIR of base snapshot ids, recorded as
-    an MV tag ``sync-<a_sid>-<b_sid>`` with the same string as
-    commit_id — replays repoint, never double-append (the mv_sync
-    exactly-once discipline); a frontier-advancing sync with an EMPTY
-    delta still commits (the frontier must move). A rewrite/compaction/
+    The applied frontier is the PAIR of base snapshot ids, carried as
+    the commit_id ``sync-<a_sid>-<b_sid>`` of every MV commit (and
+    tagged with the same string as a label) — replays repoint, never
+    double-append (the mv_sync exactly-once discipline); a
+    frontier-advancing sync with an EMPTY delta still commits (the
+    frontier must move). A rewrite/compaction/
     delete on either base inside the window makes snapshot_changes
     RAISE (q133's append-only contract) — silent drift is impossible.
 
     Steady-state cost: O(ΔA·sel + ΔB·sel) join work plus ONE side scan
     each — and when a base is PARTITIONED on the join key, the scan
-    side is partition-pruned to the delta's touched keys driver-side
-    (the metadata-scale collect, incremental.py:104's precedent), so
-    a small delta against a 100 TB base reads only the matching
-    partitions. Unpartitioned bases pay the side scan; co-locate or
+    side is partition-pruned to the delta's touched keys driver-side,
+    so a small delta against a 100 TB base reads only the matching
+    partitions. The key collect is bounded by metadata, not data: at
+    most one key more than the side has partition values is fetched,
+    and a delta with more distinct keys than that falls back to the
+    full side scan. Unpartitioned bases pay the side scan; co-locate or
     bucket them on the key for production rates (the q76 layout).
     """
     from osmcha_spark.sources import tables as T
@@ -469,13 +292,15 @@ def join_mv_sync(
         """Side scan for a delta join — partition-pruned to the
         delta's keys when the base is partitioned on the join key."""
         man = T._load_manifest(path, sid)
-        if man.get("partition_col") == key and keys_df is not None:
-            keys = [r[0] for r in keys_df.distinct().collect()]
+        if man.get("partition_col") == key:
+            n = len({f["partition"] for f in man["files"]})
+            keys = [r[0] for r in keys_df.distinct().limit(n + 1).collect()]
             if not keys:
                 return None
-            if not T.snapshot_files(path, sid, partitions=keys):
-                return None  # pruning proved the term empty
-            return T.read_snapshot(spark, path, sid, partitions=keys)
+            if len(keys) <= n:
+                if not T.snapshot_files(path, sid, partitions=keys):
+                    return None  # pruning proved the term empty
+                return T.read_snapshot(spark, path, sid, partitions=keys)
         return T.read_snapshot(spark, path, sid)
 
     if T.current_snapshot(mv_path) is None:
@@ -485,26 +310,18 @@ def join_mv_sync(
         T.snapshot_tag(mv_path, f"sync-{ca}-{cb}")
         return T.current_snapshot(mv_path)
 
-    fronts = []
-    for n in T.list_tags(mv_path):
-        # only sync-<a_sid>-<b_sid> is this view's frontier; a foreign
-        # sync-* tag (mv_sync's single-part sync-<sid>) is skipped
-        parts = n.split("-")
-        if (len(parts) == 3 and parts[0] == "sync"
-                and parts[1].isdigit() and parts[2].isdigit()):
-            fronts.append((int(parts[1]), int(parts[2])))
-    if not fronts:
-        raise ValueError(f"{mv_path} has no sync-*-* frontier tag: not "
-                         "a join_mv_sync-maintained view")
-    fa, fb = max(fronts)
     done = T._find_commit(mv_path, f"sync-{ca}-{cb}")
     if done is not None:
         if T.current_snapshot(mv_path) != done:
             T._point_current(mv_path, done)
             return done
         return None
-    if (fa, fb) == (ca, cb):
-        return None
+    # only a sync-<a_sid>-<b_sid> commit is this view's frontier
+    front = T._applied_frontier(mv_path, "sync", 2)
+    if front is None:
+        raise ValueError(f"{mv_path} has no sync-*-* commit: not a "
+                         "join_mv_sync-maintained view")
+    fa, fb = front
 
     terms = []
     if ca > fa:

@@ -1230,9 +1230,10 @@ def ivf_index_build(
     centroids: DataFrame | None = None,
 ) -> None:
     """Materialize the IVF index as STORAGE: the inverted lists are a
-    parquet table partitioned by ``centroid_id`` (one partition dir per
-    list — the layout that lets a probe read exactly its lists), and the
-    codebook is a small sibling table at ``<path>/centroids``. Centroids
+    snapshot table (sources/tables.py) at ``<path>/lists`` partitioned
+    by ``centroid_id`` — one manifest partition per list, the layout
+    that lets a probe read exactly its lists' files — and the codebook
+    is a small sibling parquet table at ``<path>/centroids``. Centroids
     derive from THIS corpus (id % stride == 0, the q29 deterministic
     convention) unless an explicit ``centroids`` table
     (centroid_id, cv) is given — the rebuild-with-the-existing-quantizer
@@ -1241,6 +1242,8 @@ def ivf_index_build(
     """
     import os as _os
 
+    from osmcha_spark.sources import tables as T
+
     if centroids is None:
         cents, assigned = ivf_assign(
             corpus, centroid_stride, id_col, vec_col
@@ -1248,9 +1251,8 @@ def ivf_index_build(
     else:
         cents = centroids.select("centroid_id", "cv")
         assigned = assign_to_centroids(corpus, cents, id_col, vec_col)
-    assigned.write.partitionBy("centroid_id").parquet(
-        _os.path.join(path, "lists")
-    )
+    T.snapshot_create(assigned, _os.path.join(path, "lists"),
+                      partition_col="centroid_id")
     cents.write.parquet(_os.path.join(path, "centroids"))
 
 
@@ -1259,32 +1261,26 @@ def ivf_index_append(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
 ) -> None:
     """Append-only index maintenance WITHOUT a rebuild: assign the new
     vectors against the STORED centroids — the quantizer is immutable
     after build; re-deriving it from the grown corpus would silently
     shift every existing list — then merge them into the lists table
-    with :func:`~osmcha_spark.operators.incremental.upsert_partitioned`,
-    which rewrites ONLY the partitions (inverted lists) that actually
-    receive vectors (q58's byte-identity discipline, asserted by q110).
-    At 10^12 vectors a minutely ingest touches a handful of lists; the
-    index never pays a full rewrite.
+    with :func:`~osmcha_spark.sources.tables.snapshot_upsert`, one
+    atomic commit that rewrites ONLY the inverted lists that actually
+    receive vectors and carries every other list's files by reference
+    (q58's byte-identity discipline, asserted by q110). At 10^12
+    vectors a minutely ingest touches a handful of lists; the index
+    never pays a full rewrite.
     """
     import os as _os
 
-    from osmcha_spark.operators.incremental import upsert_partitioned
+    from osmcha_spark.sources import tables as T
 
     spark = new_vectors.sparkSession
     cents = spark.read.parquet(_os.path.join(path, "centroids"))
     assigned = assign_to_centroids(new_vectors, cents, id_col, vec_col)
-    upsert_partitioned(
-        assigned,
-        _os.path.join(path, "lists"),
-        key="id",
-        partition_col="centroid_id",
-        checkpoint_dir=checkpoint_dir,
-    )
+    T.snapshot_upsert(assigned, _os.path.join(path, "lists"), key="id")
 
 
 def ivf_index_search(
@@ -1298,14 +1294,16 @@ def ivf_index_search(
 ) -> DataFrame:
     """Serve top-k from the STORED index: probe the ``nprobe`` nearest
     stored centroids per query, then scan ONLY those lists — the probed
-    centroid ids are collected (n_queries × nprobe, metadata-scale) into
-    a literal ``IN`` filter so the partitioned read statically prunes to
-    the probed lists (the same guaranteed-pruning choice as
-    upsert_partitioned; pinned by tests/test_plans.py). Ranking matches
-    :func:`ivf_topk`: exact quantized-dot within the probed lists,
-    descending, ties to the lowest neighbor id, self excluded.
+    centroid ids are collected (n_queries × nprobe, metadata-scale) and
+    the lists table's manifest selects exactly their files
+    (``read_snapshot(partitions=probed)``) before Spark plans the scan
+    (pinned by tests/test_plans.py via the scan's input files). Ranking
+    matches :func:`ivf_topk`: exact quantized-dot within the probed
+    lists, descending, ties to the lowest neighbor id, self excluded.
     """
     import os as _os
+
+    from osmcha_spark.sources import tables as T
 
     cents = spark.read.parquet(_os.path.join(path, "centroids"))
     qv = queries.select(
@@ -1327,9 +1325,8 @@ def ivf_index_search(
     probed_cids = sorted(
         {r.centroid_id for r in probes.select("centroid_id").collect()}
     )
-    lists = spark.read.parquet(_os.path.join(path, "lists")).where(
-        F.col("centroid_id").isin(probed_cids)
-    )
+    lists = T.read_snapshot(spark, _os.path.join(path, "lists"),
+                            partitions=probed_cids)
     cands = (
         lists.join(F.broadcast(probes), "centroid_id")
         .where(F.col("id") != F.col("query_id"))

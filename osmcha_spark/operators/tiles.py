@@ -168,8 +168,9 @@ def pyramid_merge(base: DataFrame, delta: DataFrame) -> DataFrame:
     Scale shape: the base pyramid is #cells-sized (MBs at planet scale)
     while the raw table is the 100 TB — per minutely batch this costs
     O(delta + touched cells), never a rescan; it is the aggregation-side
-    sibling of upsert_partitioned's bounded-rewrite story and composes
-    with it (partition the stored pyramid by level). Gate: q104 proves
+    sibling of snapshot_upsert's bounded-rewrite story and composes
+    with it (streaming/ingest.py:stream_pyramid stores the pyramid as a
+    level-partitioned snapshot table). Gate: q104 proves
     merge(pyramid(old), pyramid(new)) == pyramid(old ∪ new)
     value-for-value against the recompute-from-raw oracle; retraction
     inverse pinned by pytest."""

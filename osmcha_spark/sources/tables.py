@@ -35,12 +35,14 @@ def load_table(
 # --------------------------------------------------------------------
 # Snapshot table format (S10 made real)
 #
-# A minimal manifest/snapshot layer — the Iceberg ideas the engine had
-# already grown piecemeal (versioned commits streaming/ingest.py:89-150,
-# bounded partition rewrites operators/incremental.py:upsert_partitioned,
-# small-file compaction operators/incremental.py:compact_partitioned)
-# unified behind one API with the two properties those pieces lacked:
-# ATOMIC commits and TIME TRAVEL.
+# A minimal manifest/snapshot layer, and the engine's ONE commit
+# protocol: every table the engine publishes goes through it — batch
+# upserts and compaction, the streaming sinks (streaming/ingest.py:
+# stream_upsert, stream_pyramid, stream_snapshot_append/merge), the
+# stored IVF index's inverted lists (operators/similarity.py) and the
+# incremental views (operators/incremental.py:mv_sync/join_mv_sync).
+# It gives every one of them ATOMIC commits and TIME TRAVEL. The layout
+# follows the Iceberg spec (https://iceberg.apache.org/spec/).
 #
 # Layout:
 #   <path>/data/<commit>-...parquet      immutable data files
@@ -51,16 +53,17 @@ def load_table(
 # Commit protocol (single writer; a multi-writer deployment swaps the
 # _CURRENT file for a catalog CAS, exactly Iceberg's contract):
 #   1. write NEW data files into data/ (never overwriting — a snapshot
-#      table has no self-overwrite problem, so upsert_partitioned's
-#      checkpoint-before-write dance disappears by construction);
-#   2. write the manifest to a temp name, os.replace to s_<n>.json —
+#      table has no self-overwrite problem, so a bounded rewrite needs
+#      no checkpoint-before-write);
+#   2. write the manifest to a temp name, link it to s_<n>.json —
 #      manifest existence is the commit point;
 #   3. os.replace the _CURRENT pointer.
 # Crash before (2): the new files are invisible (reads go through the
 # manifest) and vacuum() reclaims them. Crash between (2) and (3):
 # readers keep the old consistent snapshot; a replay bearing the same
-# commit_id finds its manifest and just repoints (streaming/ingest.py's
-# apply_pyramid_batch semantics, generalized).
+# commit_id finds its manifest and just repoints. Anything a writer
+# must remember across commits (a sync frontier) lives in the commit_id
+# itself, so it lands in step (2) with the data; tags are labels.
 #
 # Reads prune FILES from the manifest (partition-value selection happens
 # driver-side on metadata, before Spark ever lists a directory), then the
@@ -652,6 +655,26 @@ def _find_commit(path: str, commit_id: str) -> int | None:
     return None
 
 
+def _applied_frontier(path: str, prefix: str, arity: int) -> tuple | None:
+    """The source snapshot ids a sync-maintained table last applied,
+    parsed from the ``<prefix>-<sid>[-<sid>...]`` commit_id (``arity``
+    ids) of its current manifest. The commit_id is written in the same
+    atomic step as the data it describes, so no crash can separate the
+    frontier from the commit (a tag written after the commit can be
+    lost). Commits stamped otherwise — None, like a compaction, or a
+    foreign id — are walked past via ``parent``; None when no retained
+    ancestor carries a matching stamp."""
+    sid = current_snapshot(path)
+    while sid is not None and os.path.exists(_manifest_file(path, sid)):
+        man = _load_manifest(path, sid)
+        parts = (man.get("commit_id") or "").split("-")
+        if (len(parts) == arity + 1 and parts[0] == prefix
+                and all(p.isdigit() for p in parts[1:])):
+            return tuple(int(p) for p in parts[1:])
+        sid = man.get("parent")
+    return None
+
+
 def _write_files(df: DataFrame, path: str,
                  partition_col: str | None,
                  bloom_cols: list[str] | None = None,
@@ -1049,9 +1072,10 @@ def read_snapshot(spark: SparkSession, path: str,
                            where_any)
     paths = [os.path.join(_data_dir(path), f["name"]) for f in files]
     if not paths:
-        # predicate pruning emptied the candidate set: stats pruning is
-        # lossless, so zero surviving files PROVES the result is empty
-        if (where or where_eq or where_any) and man.get("schema"):
+        # pruning emptied the candidate set: partition and stats pruning
+        # are lossless, so zero surviving files PROVES the result is empty
+        if (partitions is not None or where or where_eq or where_any) \
+                and man.get("schema"):
             from pyspark.sql.types import StructField, StructType
 
             st = StructType.fromJson(man["schema"])
@@ -1617,25 +1641,33 @@ def snapshot_append(df: DataFrame, path: str,
 
 def snapshot_upsert(updates: DataFrame, path: str, key: str,
                     version_col: str | None = None,
-                    commit_id: str | None = None) -> int:
+                    commit_id: str | None = None,
+                    *, _skip_empty: bool = False) -> int | None:
     """Copy-on-write MERGE: last-writer-wins upsert of ``updates`` into
     the current snapshot, rewriting only the partitions the batch
     touches — files of untouched partitions are CARRIED OVER by
-    reference in the new manifest (zero read, zero write; q58's dynamic
-    partition overwrite achieved the bounded WRITE but still mutated the
-    table in place — here every prior snapshot stays readable).
+    reference in the new manifest (zero read, zero write), and every
+    prior snapshot stays readable (q58 gates the carried files' bytes).
 
     ``updates`` must carry the table's partition_col. Key-uniqueness per
     operators/incremental.py:upsert's contract; pass ``version_col`` for
     unconditional out-of-order-safe LWW. ``commit_id`` makes replays
-    no-ops (exactly-once foreachBatch sinks)."""
+    no-ops (exactly-once foreachBatch sinks).
+
+    ``_skip_empty`` (the streaming sinks') commits nothing and returns
+    None when the merged frame has no rows. On a partitioned table that
+    is exactly an empty batch: the prior side is restricted to the
+    partitions the batch touches, so no separate emptiness probe runs."""
     from osmcha_spark.operators.incremental import upsert
 
     spark = updates.sparkSession
     if commit_id is not None:
         done = _find_commit(path, commit_id)
         if done is not None:
-            if current_snapshot(path) != done:
+            # heal a lost repoint; a later commit built on the replayed
+            # one (an in-line compaction) stays current
+            cur = current_snapshot(path)
+            if cur is None or not _is_ancestor(path, done, cur):
                 _point_current(path, done)
             return done
     cur = current_snapshot(path)
@@ -1651,7 +1683,10 @@ def snapshot_upsert(updates: DataFrame, path: str, key: str,
     if pcol is None:
         prior = _align(read_snapshot(spark, path, cur), schema)
         merged = upsert(prior, updates, key, version_col=version_col)
-        files = _write_files(merged, path, None, bloom_cols)
+        files = _write_files(merged, path, None, bloom_cols,
+                             skip_empty=_skip_empty)
+        if files is None:
+            return None
         # full rewrite: every applicable delete is materialized, so the
         # delete entries need not be carried
         return _commit(path, files, None, cur, commit_id, schema=schema,
@@ -1677,7 +1712,10 @@ def snapshot_upsert(updates: DataFrame, path: str, key: str,
                         version_col=version_col)
     else:
         merged = updates
-    new_files = _write_files(merged, path, pcol, bloom_cols)
+    new_files = _write_files(merged, path, pcol, bloom_cols,
+                             skip_empty=_skip_empty)
+    if new_files is None:
+        return None
     return _commit(path, carried + new_files, pcol, cur, commit_id,
                    schema=schema, bloom_cols=bloom_cols,
                    deletes=man.get("deletes"))
@@ -1789,11 +1827,13 @@ def snapshot_compact(spark: SparkSession, path: str,
     and untouched partitions' files are carried by reference. Returns
     the new snapshot id, or None when nothing qualifies (the no-op).
 
-    Same self-stabilizing guard as compact_partitioned: a partition is
-    affected only when its file count exceeds its bin count AND >= 2 of
-    its files are < target/2 — written bins average >= target/2 by
-    arithmetic, so a second run is always the no-op (idempotence without
-    remembering state)."""
+    Self-stabilizing guard (Iceberg binpack's small-file threshold): a
+    partition is affected only when its file count exceeds its bin count
+    AND >= 2 of its files are < target/2 — written bins average >=
+    target/2 by arithmetic, so a second run is always the no-op
+    (idempotence without remembering state; a bare count-vs-bins rule
+    would re-plan fewer bins on the freshly written, better-compressed
+    files and rewrite forever)."""
     import math
 
     cur = current_snapshot(path)
@@ -2109,9 +2149,11 @@ def snapshot_replicate(src_path: str, dst_path: str) -> int | None:
     Bloom filters, partition values, spec) are cloned verbatim, so the
     replica prunes exactly like the primary. O(delta bytes) per call.
 
-    Frontier = a ``repl-<src_sid>`` tag on dst with the same string as
-    commit_id (the mv_sync exactly-once discipline: replays repoint,
-    never re-copy). First call = full copy of the current file set.
+    Frontier = the ``repl-<src_sid>`` commit_id of dst's current
+    manifest (:func:`_applied_frontier`; the mv_sync exactly-once
+    discipline: replays repoint, never re-copy); a ``repl-<src_sid>``
+    tag labels each replicated snapshot. First call = full copy of the
+    current file set.
     Contract: append-only ranges, like :func:`snapshot_changes` — a
     rewrite/compaction or an equality/position delete on src inside
     the window makes the file diff non-representable and this RAISES
@@ -2146,15 +2188,12 @@ def snapshot_replicate(src_path: str, dst_path: str) -> int | None:
         carried: list[dict] = []
         parent = None
     else:
-        fronts = [int(n[5:]) for n in list_tags(dst_path)
-                  if n.startswith("repl-")]
-        if not fronts:
+        front = _applied_frontier(dst_path, "repl", 1)
+        if front is None:
             raise ValueError(
-                f"{dst_path} has no repl-* frontier tag: not a "
+                f"{dst_path} has no repl-* commit: not a "
                 "snapshot_replicate-maintained replica")
-        frontier = max(fronts)
-        if frontier == cur:
-            return None
+        frontier = front[0]
         man_from = _load_manifest(src_path, frontier)
         old = {f["name"] for f in man_from["files"]}
         to_names = {f["name"] for f in man["files"]}

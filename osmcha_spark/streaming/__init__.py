@@ -18,7 +18,6 @@ from osmcha_spark.streaming.dedup import (
 )
 from osmcha_spark.streaming.ingest import (
     apply_pyramid_batch,
-    read_pyramid,
     stream_pyramid,
     stream_snapshot_append,
     stream_upsert,
@@ -46,7 +45,6 @@ __all__ = [
     "run_dedup_stream",
     "enrich_stream",
     "apply_pyramid_batch",
-    "read_pyramid",
     "stream_pyramid",
     "stream_snapshot_append",
     "stream_upsert",

@@ -1,14 +1,20 @@
-"""Streaming ingest — continuous merge into partitioned storage.
+"""Streaming ingest — continuous commits into the snapshot table format.
 
 The last mile of the replication pipeline: a stream of updates kept
-flowing into a partitioned parquet snapshot, rewriting only touched
-partitions per micro-batch. Reuses the batch-tested upsert path through
-``foreachBatch`` rather than reimplementing MERGE semantics in a sink.
+flowing into stored tables through ``foreachBatch``, every micro-batch
+one commit of the snapshot table (sources/tables.py) stamped with a
+``commit_id`` derived from the batch id, so a foreachBatch replay finds
+its manifest and repoints instead of writing twice. The sinks reuse the
+batch-tested table verbs rather than reimplementing MERGE semantics:
+:func:`stream_upsert` (copy-on-write upsert), :func:`stream_pyramid`
+(additive fold), :func:`stream_snapshot_append` (append-only) and
+:func:`stream_snapshot_merge` (MERGE INTO clauses).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
 
 def stream_upsert(
     stream: DataFrame,
@@ -18,32 +24,43 @@ def stream_upsert(
     checkpoint_dir: str,
     version_col: str | None = None,
 ):
-    """Continuous merge: drive :func:`~osmcha_spark.operators.
-    incremental.upsert_partitioned` from a stream via ``foreachBatch`` —
-    the ingest loop that keeps a partitioned parquet snapshot current
-    (the minutely-replication pattern of tools/job_incremental_pipeline
-    .py, incrementalized: each micro-batch rewrites ONLY the partitions
-    it touches).
+    """Continuous merge into a snapshot table: the first micro-batch
+    creates the table (partitioned by ``partition_col``; an existing
+    table keeps its own spec), every later one is a
+    :func:`~osmcha_spark.sources.tables.snapshot_upsert` commit that
+    rewrites ONLY the partitions it touches and carries the rest by
+    file reference — the minutely-replication pattern of
+    tools/job_snapshot_pipeline.py, incrementalized.
 
-    foreachBatch is the sanctioned bridge for sinks Structured
-    Streaming lacks natively (MERGE-shaped writes): the batch frame is
-    a plain DataFrame, so the whole batch-tested upsert path — literal
-    partition pruning, anti-join + union, dynamic partition overwrite,
-    bounded checkpoint — is reused verbatim, not reimplemented. The
-    streaming checkpoint (offsets) makes delivery effectively
-    exactly-once for this idempotent merge: a replayed batch re-merges
-    the same keys to the same values (LWW with ``version_col`` makes
-    replay idempotence unconditional). Restart-resume is pytest-gated
-    (tests/test_streaming.py), same discipline as q37.
+    Commits are stamped ``commit_id="stream-upsert-<id>"``: a
+    foreachBatch replay (the window after the commit but before the
+    offset log) finds its manifest and repoints, so a replay never
+    merges twice — exactly-once at the table level, and with
+    ``version_col`` the LWW is additionally idempotent across batches
+    (an out-of-order stale batch cannot regress a row). Restart-resume
+    is pytest-gated (tests/test_streaming.py), same discipline as q37.
+
+    No emptiness probe: an empty batch writes zero rows, which the
+    table's footer-count check turns into "commit nothing" (a
+    partitioned upsert's merged frame is empty exactly when the batch
+    is), so the only Spark passes are the upsert's own partition
+    collect and write.
     """
-    from osmcha_spark.operators.incremental import upsert_partitioned
+    from osmcha_spark.operators.incremental import upsert
+    from osmcha_spark.sources import tables as T
 
-    def _merge(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        upsert_partitioned(
-            batch, path, key, partition_col, version_col=version_col
-        )
+    def _merge(batch: DataFrame, batch_id: int) -> None:
+        cid = f"stream-upsert-{batch_id}"
+        if T.current_snapshot(path) is None:
+            if version_col is not None:
+                # the within-batch LWW an upsert into the table applies
+                batch = upsert(batch.limit(0), batch, key,
+                               version_col=version_col)
+            T.snapshot_create(batch, path, partition_col=partition_col,
+                              commit_id=cid, _skip_empty=True)
+        else:
+            T.snapshot_upsert(batch, path, key, version_col=version_col,
+                              commit_id=cid, _skip_empty=True)
 
     return (
         stream.writeStream.foreachBatch(_merge)
@@ -51,39 +68,6 @@ def stream_upsert(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _current_version(path: str) -> str | None:
-    import os
-
-    ptr = os.path.join(path, "_CURRENT")
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        return fh.read().strip() or None
-
-
-def _point_current(path: str, version: str) -> None:
-    """Atomically repoint the table's _CURRENT pointer (tmp +
-    os.replace — the POSIX-atomic publish step of the commit
-    protocol)."""
-    import os
-
-    tmp = os.path.join(path, "_CURRENT.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(version + "\n")
-    os.replace(tmp, os.path.join(path, "_CURRENT"))
-
-
-def read_pyramid(spark, path: str) -> DataFrame:
-    """Read the CURRENT committed version of a streamed pyramid table
-    (see :func:`apply_pyramid_batch` for the commit protocol)."""
-    import os
-
-    cur = _current_version(path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed pyramid at {path}")
-    return spark.read.parquet(os.path.join(path, cur))
 
 
 def apply_pyramid_batch(
@@ -99,55 +83,51 @@ def apply_pyramid_batch(
     :func:`stream_pyramid`, module-level so its replay/crash semantics
     are directly testable.
 
-    Additive merges are NOT naturally idempotent (replaying a batch
-    would double-count — unlike :func:`stream_upsert`'s LWW), so the
-    table uses a versioned commit protocol, the snapshot idea of table
-    formats re-expressed in two primitives:
+    The stored pyramid is a snapshot table ``(level, cell, n)``
+    partitioned by ``level`` and keyed on ``cell`` (a cell id carries
+    its level). The batch's delta pyramid is folded in the way
+    :func:`~osmcha_spark.operators.incremental.mv_sync` folds a rollup:
+    the stored rows of the touched cells plus the delta, summed, then
+    one :func:`~osmcha_spark.sources.tables.snapshot_upsert`. Additive
+    merges are NOT naturally idempotent (replaying a batch would
+    double-count — unlike :func:`stream_upsert`'s LWW), so the commit is
+    stamped ``commit_id="stream-pyramid-<batch_id>"``: a replay of a
+    committed batch finds its manifest and is a no-op, and a crash
+    between the manifest and the ``_CURRENT`` repoint heals by the
+    repoint alone. After each commit ``expire_snapshots(keep_last=2)``
+    keeps current + previous (the previous survives for in-flight
+    readers). An empty batch commits nothing.
 
-    1. build ``v_<batch_id>`` = pyramid_merge(current version, delta
-       pyramid of this batch) and write it to its own subdirectory;
-    2. atomically repoint the ``_CURRENT`` pointer file (os.replace).
-
-    Crash windows: before the version's ``_SUCCESS`` → replay rebuilds
-    it from the UNCHANGED current version (no partial state is ever
-    read); after ``_SUCCESS`` but before the repoint → replay finds the
-    complete version and just repoints. A replay of a fully committed
-    batch is a pure no-op. Versions older than the previous one are
-    pruned after publish (the previous survives for in-flight readers).
-    O(pyramid) per batch — the pyramid is #cells-sized (MBs at planet
-    scale) while the raw stream is the 100 TB; the raw side is touched
-    delta-only via tile_pyramid on the batch.
+    Points with a NULL coordinate have no cell (geo/cells.py) and are
+    not counted. O(pyramid) per batch — the pyramid is #cells-sized
+    (MBs at planet scale) while the raw stream is the 100 TB; the raw
+    side is touched delta-only via tile_pyramid on the batch.
     """
-    import os
-    import shutil
+    from pyspark.sql import functions as F
 
     from osmcha_spark.operators.tiles import pyramid_merge, tile_pyramid
+    from osmcha_spark.sources import tables as T
 
-    spark = batch.sparkSession
-    vname = f"v_{batch_id:020d}"
-    vdir = os.path.join(path, vname)
-    cur = _current_version(path)
-    if os.path.exists(os.path.join(vdir, "_SUCCESS")):
-        if cur is None or cur < vname:
-            _point_current(path, vname)
-        return
-    if batch.isEmpty():
-        return
-    delta = tile_pyramid(batch, lon_col, lat_col, level, min_level)
-    if cur is not None:
-        base = spark.read.parquet(os.path.join(path, cur))
-        merged = pyramid_merge(base, delta)
-    else:
-        merged = delta
-    # the merge reads the current version's files, never vdir's, so no
-    # self-overwrite checkpoint is needed — versions are immutable
-    merged.write.mode("overwrite").parquet(vdir)
-    _point_current(path, vname)
-    if cur is not None:
-        for name in os.listdir(path):
-            if name.startswith("v_") and name < cur:
-                shutil.rmtree(os.path.join(path, name),
-                              ignore_errors=True)
+    cid = f"stream-pyramid-{batch_id}"
+    points = batch.where(F.col(lon_col).isNotNull()
+                         & F.col(lat_col).isNotNull())
+    # cached: the upsert reads the delta twice (its partition collect,
+    # then its write), and the cache stops the isnotnull(cell) Spark
+    # infers for the joins on cell from being pushed down into the
+    # encoder — one more copy per level, past the 64 KB codegen limit
+    delta = tile_pyramid(points, lon_col, lat_col, level, min_level).cache()
+    try:
+        if T.current_snapshot(path) is None:
+            T.snapshot_create(delta, path, partition_col="level",
+                              commit_id=cid, _skip_empty=True)
+        else:
+            stored = T.read_snapshot(batch.sparkSession, path)
+            touched = stored.join(delta.select("cell"), "cell")
+            T.snapshot_upsert(pyramid_merge(touched, delta), path, "cell",
+                              commit_id=cid, _skip_empty=True)
+    finally:
+        delta.unpersist()
+    T.expire_snapshots(path, keep_last=2)
 
 
 def stream_pyramid(
@@ -160,13 +140,14 @@ def stream_pyramid(
     checkpoint_dir: str,
 ):
     """Continuously-maintained tile pyramid: every micro-batch folds its
-    delta pyramid into the stored one via :func:`apply_pyramid_batch`'s
-    versioned commit — the aggregation-side sibling of
+    delta pyramid into the stored snapshot table via
+    :func:`apply_pyramid_batch` — the aggregation-side sibling of
     :func:`stream_upsert` (minutely replication keeps dashboards
-    current without ever rescanning raw). Gate: q105 proves the
-    streamed table equals the from-scratch pyramid over all rows
-    (q43's recompute-from-raw oracle); replay idempotence and the
-    crash-window redo are pytest-gated."""
+    current without ever rescanning raw). Read it with
+    :func:`~osmcha_spark.sources.tables.read_snapshot`. Gate: q105
+    proves the streamed table equals the from-scratch pyramid over all
+    rows (q43's recompute-from-raw oracle); replay idempotence and the
+    crash-window repoint are pytest-gated."""
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
         apply_pyramid_batch(
@@ -179,7 +160,6 @@ def stream_pyramid(
         .trigger(availableNow=True)
         .start()
     )
-
 
 
 def stream_snapshot_append(
@@ -262,7 +242,12 @@ def stream_snapshot_merge(
     rewrites only the partitions those rows live in. The first batch
     creates the table. Within one micro-batch the merge sees each key
     once iff the upstream emits it once; dedup upstream (q73's
-    streaming dedup) when the changelog can repeat keys intra-batch."""
+    streaming dedup) when the changelog can repeat keys intra-batch.
+
+    Unlike the other sinks this one keeps a ``batch.isEmpty()`` probe:
+    the MERGE target may be unpartitioned, and an unpartitioned rewrite
+    holds every prior row, so the written frame gives no free emptiness
+    signal — without the probe an empty batch would rewrite the table."""
     from osmcha_spark.sources import tables as T
 
     def _merge(batch: DataFrame, batch_id: int) -> None:

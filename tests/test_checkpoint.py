@@ -174,14 +174,17 @@ def test_spark_submit_dedup_job_runs_and_resumes(tmp_path):
                                "kept_canonical")}
 
 
-def test_spark_submit_incremental_merge_bounded_rewrite(
+def test_spark_submit_snapshot_merge_bounded_rewrite(
         tmp_path, spark, replication_gz):
     """Deployment path for the minutely-replication merge
-    (tools/job_incremental_pipeline.py): submit #1 bootstraps the
-    bucket-partitioned verdict snapshot from the reference replication
-    fixture; submit #2 merges a one-changeset update batch (comments_count
-    bumped) and must (a) leave every other bucket's files byte-identical,
-    (b) update exactly that row, (c) keep the snapshot row count."""
+    (tools/job_snapshot_pipeline.py): submit #1 bootstraps the
+    bucket-partitioned verdict snapshot table from the reference
+    replication fixture; submit #2 merges a one-changeset update batch
+    (comments_count bumped) and must (a) write files for exactly one
+    bucket and carry every other bucket's files by reference with
+    unchanged md5, (b) update exactly that row, (c) keep the table row
+    count; re-submitting the same batch reports ``replayed`` and writes
+    no file."""
     import hashlib
     import json
     import os
@@ -190,6 +193,8 @@ def test_spark_submit_incremental_merge_bounded_rewrite(
     import sys
 
     import pytest
+
+    from osmcha_spark.sources import tables as T
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spark_submit = shutil.which("spark-submit")
@@ -202,7 +207,7 @@ def test_spark_submit_incremental_merge_bounded_rewrite(
          zip_path],
         check=True, capture_output=True,
     )
-    snap = str(tmp_path / "snap")
+    table = str(tmp_path / "table")
     aux = os.path.join(repo, "tests", "data")
 
     def submit(repl):
@@ -211,9 +216,9 @@ def test_spark_submit_incremental_merge_bounded_rewrite(
              "--conf", "spark.ui.enabled=false",
              "--conf", "spark.sql.shuffle.partitions=8",
              "--py-files", zip_path,
-             os.path.join(repo, "tools", "job_incremental_pipeline.py"),
+             os.path.join(repo, "tools", "job_snapshot_pipeline.py"),
              "--replication-dir", repl,
-             "--aux-dir", aux, "--snapshot", snap],
+             "--aux-dir", aux, "--table", table],
             capture_output=True, text=True, timeout=300,
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
@@ -241,28 +246,35 @@ def test_spark_submit_incremental_merge_bounded_rewrite(
     batch_dir.mkdir()
     write_replication_gz([row], str(batch_dir / "000002.osm.gz"))
 
-    touched_bucket = 31982803 % 8
+    touched_bucket = str(31982803 % 8)
 
-    def manifest():
+    def files():
         out = {}
-        for root, _, files in os.walk(snap):
-            if f"bucket={touched_bucket}" in root:
-                continue
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    p = os.path.join(root, fn)
-                    with open(p, "rb") as fh:
-                        out[os.path.relpath(p, snap)] = hashlib.md5(
-                            fh.read()
-                        ).hexdigest()
+        for f in T.snapshot_files(table):
+            with open(os.path.join(T._data_dir(table), f["name"]),
+                      "rb") as fh:
+                out[f["name"]] = (f["partition"],
+                                  hashlib.md5(fh.read()).hexdigest())
         return out
 
-    before = manifest()
+    before = files()
     r2 = submit(str(batch_dir))
-    assert not r2["bootstrap"]
-    assert r2["touched_buckets"] == 1
+    assert not r2["bootstrap"] and not r2["replayed"]
     assert r2["snapshot_rows"] == 25  # update, not insert
-    assert manifest() == before, "untouched buckets were rewritten"
+    after = files()
+    written = {after[n][0] for n in set(after) - set(before)}
+    assert written == {touched_bucket}
+    untouched = {n: v for n, v in before.items() if v[0] != touched_bucket}
+    assert untouched and all(after.get(n) == v
+                             for n, v in untouched.items()), \
+        "untouched buckets were rewritten"
+    assert r2["files_carried_by_reference"] == len(untouched)
 
-    got = spark.read.parquet(snap).where("id = 31982803").collect()
+    got = T.read_snapshot(spark, table).where("id = 31982803").collect()
     assert len(got) == 1 and got[0]["comments_count"] == 99
+
+    # the same batch again: the commit_id finds its manifest
+    data = sorted(os.listdir(T._data_dir(table)))
+    r3 = submit(str(batch_dir))
+    assert r3["replayed"] and r3["snapshot"] == r2["snapshot"]
+    assert sorted(os.listdir(T._data_dir(table))) == data

@@ -741,65 +741,6 @@ def test_frac_guard_matches_int_guard_and_builds_lazily(spark, docs_df):
     assert tf.count() > 0
 
 
-def test_upsert_partitioned_rewrites_only_touched_partitions(
-    spark, tmp_path
-):
-    """upsert_partitioned (VERDICT r2 item 1): dynamic partition
-    overwrite must leave untouched partitions' files byte-identical,
-    produce the merged contents, and honor version_col dedup — all in
-    reliable-checkpoint mode (q58 gates the localCheckpoint default)."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F
-
-    from osmcha_spark.operators.incremental import upsert_partitioned
-
-    snap = str(tmp_path / "snap")
-    prior = spark.range(40).select(
-        F.col("id"),
-        F.lit("old").alias("v"),
-        F.lit(0).alias("ver"),
-        F.pmod("id", F.lit(4)).cast("int").alias("part"),
-    )
-    prior.write.partitionBy("part").parquet(snap)
-
-    def manifest():
-        out = {}
-        for root, _, files in os.walk(snap):
-            if "part=2" in root:
-                continue  # the one partition the batch touches
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    p = os.path.join(root, fn)
-                    with open(p, "rb") as fh:
-                        out[os.path.relpath(p, snap)] = hashlib.md5(
-                            fh.read()
-                        ).hexdigest()
-        return out
-
-    before = manifest()
-    # both updates land in part=2 (2%4 == 102%4 == 2); id 2 arrives twice
-    # with different versions — version_col must keep ver=2 only
-    updates = spark.createDataFrame(
-        [(2, "mid", 1, 2), (2, "new", 2, 2), (102, "ins", 1, 2)],
-        "id long, v string, ver int, part int",
-    )
-    upsert_partitioned(
-        updates, snap, key="id", partition_col="part",
-        version_col="ver", checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    assert manifest() == before, "untouched partitions were rewritten"
-    got = {
-        r["id"]: (r["v"], r["part"])
-        for r in spark.read.parquet(snap).collect()
-    }
-    assert len(got) == 41  # 40 prior + 1 insert
-    assert got[2] == ("new", 2)        # updated, max version won
-    assert got[102] == ("ins", 2)      # inserted into the touched part
-    assert got[0] == ("old", 0) and got[7] == ("old", 3)  # untouched
-
-
 def test_interval_join_matches_bruteforce(spark):
     """Bucketed interval join ≡ naive cross-filter on hostile inputs:
     inclusive ends, ts exactly on bucket boundaries, negative axis
@@ -1491,68 +1432,6 @@ def test_ann_recall_curve_pins(spark):
     assert cl["ivf_nprobe4"] > 2 * res["ivf_nprobe4"]
     assert cl["pq_m8_refine25"] >= cl["pq_m8"]
     assert cl["pq_m8_refine100"] >= cl["pq_m8_refine25"]
-
-
-def test_compact_partitioned_bins_content_idempotence(spark, tmp_path):
-    """compact_partitioned (q109) beyond the gate's 1-bin case: a
-    partition whose bytes exceed target_bytes plans MULTIPLE bins (never
-    more files than before, never fewer than one), content survives
-    row-for-row, and a second run is a no-op (zero partitions affected —
-    the min_input_files hysteresis: freshly-written bins compress
-    smaller, so a bare count-vs-bins rule would re-plan fewer bins and
-    rewrite forever; the stats say 0 and the files stay byte-identical)."""
-    import hashlib
-    import os as _os
-
-    from osmcha_spark.operators.incremental import (
-        _partition_files,
-        compact_partitioned,
-    )
-
-    snap = str(tmp_path / "snap")
-    df = spark.range(0, 4000).select(
-        F.col("id"),
-        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
-        F.pmod(F.col("id"), F.lit(2)).cast("int").alias("part"),
-    )
-    df.repartition(16).write.partitionBy("part").parquet(snap)
-    listing = _partition_files(snap, "part")
-    assert all(len(fs) == 16 for fs in listing.values())
-    part_bytes = sum(sz for _, sz in listing["0"])
-    before_rows = sorted(
-        (r.id, r.payload, r.part)
-        for r in spark.read.parquet(snap).collect()
-    )
-
-    # target = ~1/3 of a partition's bytes → 3-4 bins per partition
-    stats = compact_partitioned(
-        spark, snap, "part", target_bytes=max(1, part_bytes // 3)
-    )
-    assert stats["partitions_compacted"] == 2
-    after = _partition_files(snap, "part")
-    for val, fs in after.items():
-        assert 1 <= len(fs) <= 16
-    assert stats["files_after"] <= stats["bins_planned"]
-    assert before_rows == sorted(
-        (r.id, r.payload, r.part)
-        for r in spark.read.parquet(snap).collect()
-    )
-
-    manifest = {
-        f: (sz, hashlib.md5(open(f, "rb").read()).hexdigest())
-        for fs in _partition_files(snap, "part").values()
-        for f, sz in fs
-    }
-    stats2 = compact_partitioned(
-        spark, snap, "part", target_bytes=max(1, part_bytes // 3)
-    )
-    assert stats2["partitions_compacted"] == 0
-    assert manifest == {
-        f: (sz, hashlib.md5(open(f, "rb").read()).hexdigest())
-        for fs in _partition_files(snap, "part").values()
-        for f, sz in fs
-    }
-    assert _os.path.isdir(snap)
 
 
 def test_apply_changes_roundtrips_snapshot_diff(spark):

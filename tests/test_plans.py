@@ -286,11 +286,12 @@ def test_tile_pyramid_scans_base_once(spark):
 
 
 def test_upsert_partitioned_scan_prunes_partitions(spark, tmp_path):
-    """The partitioned-upsert read path must reach the scan as a literal
-    partition filter (PartitionFilters: part IN/EQ …) so untouched
+    """A literal ``isin`` on a partition column must reach the scan as a
+    partition filter (PartitionFilters: part IN/EQ …) so unselected
     partitions are never read — measured: the semi-join formulation gets
-    no dynamic pruning in local mode, which is why the operator collects
-    the metadata-scale partition list and filters with isin."""
+    no dynamic pruning in local mode, which is why driver-side literal
+    filters are the engine's pruning choice (geo/cells.py:
+    cell_ranges_for_rect relies on the same static pushdown)."""
     import os
 
     snap = str(tmp_path / "snap")
@@ -620,13 +621,16 @@ def test_prefix_jaccard_reuses_exchanges(spark):
 
 
 def test_ivf_index_search_prunes_to_probed_lists(spark, tmp_path):
-    """ivf_index_search (q110) must reach the lists scan with a literal
-    partition filter on the PROBED centroid ids only — the stored-index
-    serving contract: nprobe lists read, every other inverted list never
-    touched. Also pins: append-then-search equals search over a
-    from-scratch index built with the SAME codebook (the oracle proves
-    this vs SQL; here it is pinned engine-vs-engine so a probe-layer
-    regression can't hide behind an oracle edit)."""
+    """ivf_index_search (q110) must scan exactly the PROBED inverted
+    lists — the stored-index serving contract: the lists scan's input
+    files are the manifest files of the nprobe nearest lists of the
+    query (computed here in plain Python), every other list never
+    touched.
+    Also pins: append-then-search equals search over a from-scratch
+    index built with the SAME codebook (the oracle proves this vs SQL;
+    here it is pinned engine-vs-engine so a probe-layer regression
+    can't hide behind an oracle edit)."""
+    import math
     import os
 
     from osmcha_spark.operators.similarity import (
@@ -635,6 +639,7 @@ def test_ivf_index_search_prunes_to_probed_lists(spark, tmp_path):
         ivf_index_search,
         ivf_topk,
     )
+    from osmcha_spark.sources import tables as T
 
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
@@ -648,12 +653,27 @@ def test_ivf_index_search_prunes_to_probed_lists(spark, tmp_path):
 
     out = ivf_index_search(spark, idx, q, k=5, nprobe=2)
     plan = _plan(out)
-    pf_lines = [
-        ln for ln in plan.splitlines()
-        if "PartitionFilters" in ln and "centroid_id" in ln
-    ]
-    assert pf_lines, f"no centroid_id partition filter:\n{plan}"
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+    def qvec(v):  # Spark's round(x * 1024): half away from zero
+        return [int(math.copysign(math.floor(abs(x) * 1024 + 0.5), x))
+                for x in v]
+
+    # one query probes 2 of the 8 lists (the 6 queries probe them all)
+    one = q.where(F.col("vec_id") == 1)
+    cents = {r.centroid_id: r.cv for r in spark.read.parquet(
+        os.path.join(idx, "centroids")).collect()}
+    qv = qvec(one.first().embedding)
+    d2 = sorted((sum((a - b) ** 2 for a, b in zip(qv, cv)), cid)
+                for cid, cv in cents.items())
+    probed = {cid for _, cid in d2[:2]}
+    lists = os.path.join(idx, "lists")
+    assert probed < {int(f["partition"]) for f in T.snapshot_files(lists)}
+    served = ivf_index_search(spark, idx, one, k=5, nprobe=2)
+    scanned = {os.path.basename(f) for f in served.inputFiles()
+               if "/lists/" in f}
+    assert scanned == {f["name"] for f in
+                       T.snapshot_files(lists, partitions=sorted(probed))}
 
     # engine-vs-engine identity: a from-scratch rebuild over the FULL
     # corpus with the SAME stored codebook (explicit centroids — a bare

@@ -586,31 +586,31 @@ def test_enrich_stream_cross_batch_and_left_outer(spark, stream_dirs):
 
 def test_stream_upsert_merges_and_resumes(spark, stream_dirs, tmp_path):
     """foreachBatch-driven continuous merge: two micro-batches upsert
-    into a partitioned snapshot (second overwrites first's key); a
-    RESTARTED query consumes only the file added after the first drain
-    (offset checkpoint) and merges it — final table = last writer per
-    key, untouched partitions intact."""
+    into a partitioned snapshot table (second overwrites first's key),
+    one commit each; a RESTARTED query consumes only the file added
+    after the first drain (offset checkpoint) and merges it — final
+    table = last writer per key, untouched partitions carried by file
+    reference."""
     import glob
     import os
     import shutil
 
+    from osmcha_spark.sources import tables as T
     from osmcha_spark.streaming import stream_upsert
 
     in_dir, _out, ckpt = stream_dirs
     table = str(tmp_path / "table")
+    schema = "id long, part string, v long"
     # seed snapshot: two partitions
-    spark.createDataFrame(
-        [(1, "p1", 10), (2, "p2", 20)], "id long, part string, v long"
-    ).write.partitionBy("part").parquet(table)
+    T.snapshot_create(
+        spark.createDataFrame([(1, "p1", 10), (2, "p2", 20)], schema),
+        table, partition_col="part")
 
     def add_file(rows, name):
         tmp = str(tmp_path / f"_st_{name}")
-        spark.createDataFrame(rows, "id long, part string, v long") \
-            .coalesce(1).write.parquet(tmp)
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
         part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
         shutil.move(part, os.path.join(in_dir, f"{name}.parquet"))
-
-    schema = "id long, part string, v long"
 
     def drain():
         ss = (
@@ -621,59 +621,65 @@ def test_stream_upsert_merges_and_resumes(spark, stream_dirs, tmp_path):
                           checkpoint_dir=ckpt)
         q.awaitTermination()
 
+    def p2_files():
+        return {f["name"] for f in T.snapshot_files(table)
+                if f["partition"] == "p2"}
+
+    def snapshot():
+        return {r.id: (r.part, r.v)
+                for r in T.read_snapshot(spark, table).collect()}
+
+    p2 = p2_files()
     add_file([(1, "p1", 11)], "b0")        # update key 1
     add_file([(3, "p1", 33)], "b1")        # new key in p1
     drain()
-    got = {r.id: (r.part, r.v)
-           for r in spark.read.parquet(table).collect()}
-    assert got == {1: ("p1", 11), 2: ("p2", 20), 3: ("p1", 33)}
-
-    p2_files = sorted(os.listdir(os.path.join(table, "part=p2")))
+    assert snapshot() == {1: ("p1", 11), 2: ("p2", 20), 3: ("p1", 33)}
+    assert T.list_snapshots(table) == [0, 1, 2]  # one commit per batch
 
     add_file([(1, "p1", 111), (4, "p3", 44)], "b2")
     drain()  # restart from checkpoint: only b2 is new
-    got = {r.id: (r.part, r.v)
-           for r in spark.read.parquet(table).collect()}
-    assert got == {1: ("p1", 111), 2: ("p2", 20), 3: ("p1", 33),
-                   4: ("p3", 44)}
-    # p2 never touched by any batch: files identical
-    assert sorted(os.listdir(os.path.join(table, "part=p2"))) == p2_files
+    assert snapshot() == {1: ("p1", 111), 2: ("p2", 20), 3: ("p1", 33),
+                          4: ("p3", 44)}
+    assert [T._load_manifest(table, s)["commit_id"]
+            for s in T.list_snapshots(table)] == [
+        None, "stream-upsert-0", "stream-upsert-1", "stream-upsert-2"]
+    # p2 never touched by any batch: its file carried by reference
+    assert p2_files() == p2
 
 
 def test_stream_upsert_replay_overlapping_keys_lww(
     spark, stream_dirs, tmp_path
 ):
     """VERDICT r3 item 9: the q96 gate uses key-disjoint batches by
-    design; this pins LWW idempotence END-TO-END through foreachBatch
+    design; this pins replay safety END-TO-END through foreachBatch
     when a batch REPLAYS with keys overlapping the snapshot. The replay
     is genuine: the streaming checkpoint is rolled back to its pre-drain
-    copy (simulating a crash after the foreachBatch write committed but
-    before the offset log did), so the SAME file goes through the same
-    merge again — with ``version_col``, the table must be byte-stable
-    across the replay, and a strictly STALE batch (lower version than
-    the snapshot) must not regress the table."""
+    state (simulating a crash after the commit but before the offset
+    log), so the SAME file goes through the same sink again. The
+    replayed batch finds its ``stream-upsert-<id>`` commit: no new
+    snapshot, no new file — and when the crash also lost the _CURRENT
+    repoint, the replay heals it by the repoint alone. A strictly STALE
+    batch (lower version than the table's) must not regress the table
+    (``version_col`` LWW)."""
     import glob
     import os
     import shutil
 
+    from osmcha_spark.sources import tables as T
     from osmcha_spark.streaming import stream_upsert
 
     in_dir, _out, ckpt = stream_dirs
     table = str(tmp_path / "table")
-    spark.createDataFrame(
-        [(1, "p1", 10, 5), (2, "p2", 20, 1)],
-        "id long, part string, v long, ver long",
-    ).write.partitionBy("part").parquet(table)
+    schema = "id long, part string, v long, ver long"
+    T.snapshot_create(
+        spark.createDataFrame([(1, "p1", 10, 5), (2, "p2", 20, 1)], schema),
+        table, partition_col="part")
 
     def add_file(rows, name):
         tmp = str(tmp_path / f"_st_{name}")
-        spark.createDataFrame(
-            rows, "id long, part string, v long, ver long"
-        ).coalesce(1).write.parquet(tmp)
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
         part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
         shutil.move(part, os.path.join(in_dir, f"{name}.parquet"))
-
-    schema = "id long, part string, v long, ver long"
 
     def drain():
         ss = (
@@ -686,21 +692,36 @@ def test_stream_upsert_replay_overlapping_keys_lww(
 
     def snapshot():
         return {r.id: (r.part, r.v, r.ver)
-                for r in spark.read.parquet(table).collect()}
+                for r in T.read_snapshot(spark, table).collect()}
+
+    def state():
+        return (T.list_snapshots(table),
+                sorted(os.listdir(T._data_dir(table))))
 
     # batch overlaps key 1 (newer version) and inserts key 3
     add_file([(1, "p1", 11, 6), (3, "p1", 33, 2)], "b0")
     drain()
     want = {1: ("p1", 11, 6), 2: ("p2", 20, 1), 3: ("p1", 33, 2)}
     assert snapshot() == want
+    committed = state()
 
     # roll the offset log back and drain again: b0 replays through
-    # foreachBatch against a table that already contains its writes
+    # foreachBatch against a table that already holds its commit
     # (fresh checkpoint == replay from the beginning: b0 is rediscovered)
     shutil.rmtree(ckpt)
     os.makedirs(ckpt)
     drain()
     assert snapshot() == want, "replayed batch changed the table"
+    assert state() == committed, "replayed batch wrote a new commit"
+
+    # the same replay after a crash that also lost the _CURRENT repoint
+    T._point_current(table, 0)
+    assert snapshot() != want  # readers see the previous snapshot
+    shutil.rmtree(ckpt)
+    os.makedirs(ckpt)
+    drain()
+    assert T.current_snapshot(table) == 1
+    assert snapshot() == want and state() == committed
 
     # a strictly stale batch (ver 4 < snapshot's ver 6 for key 1) must
     # lose the cross-snapshot LWW — no regression
@@ -710,16 +731,17 @@ def test_stream_upsert_replay_overlapping_keys_lww(
 
 
 def test_pyramid_commit_protocol_replay_and_crash(spark, tmp_path):
-    """apply_pyramid_batch's versioned commit makes the ADDITIVE merge
+    """apply_pyramid_batch's snapshot commits make the ADDITIVE merge
     replay-safe: re-applying a committed batch is a no-op (no double
-    counting), the crash window between version-write and pointer
-    publish redoes as a pure repoint, and old versions are pruned down
-    to current + previous."""
+    counting, no new snapshot or data file), a crash between the
+    manifest and the _CURRENT repoint heals by the repoint alone, an
+    empty batch commits nothing, and expiry keeps at most current +
+    previous snapshots."""
     from osmcha_spark.operators.tiles import tile_pyramid
-    from osmcha_spark.streaming import apply_pyramid_batch, read_pyramid
+    from osmcha_spark.sources import tables as T
+    from osmcha_spark.streaming import apply_pyramid_batch
 
     path = str(tmp_path / "pyr")
-    os.makedirs(path)
 
     def pts(lo, hi):
         return spark.range(lo, hi).select(
@@ -730,10 +752,13 @@ def test_pyramid_commit_protocol_replay_and_crash(spark, tmp_path):
             .alias("lat"),
         )
 
+    def apply(lo, hi, batch_id):
+        apply_pyramid_batch(pts(lo, hi), batch_id, path, "lon", "lat", 8, 5)
+
     def snap():
         return {
             (r.level, r.cell, r.n)
-            for r in read_pyramid(spark, path).collect()
+            for r in T.read_snapshot(spark, path).collect()
         }
 
     def want(df):
@@ -742,34 +767,44 @@ def test_pyramid_commit_protocol_replay_and_crash(spark, tmp_path):
             for r in tile_pyramid(df, "lon", "lat", 8, 5).collect()
         }
 
-    apply_pyramid_batch(pts(0, 400), 0, path, "lon", "lat", 8, 5)
-    assert snap() == want(pts(0, 400))
-    # replay of a committed batch: byte-level no-op
-    apply_pyramid_batch(pts(0, 400), 0, path, "lon", "lat", 8, 5)
-    assert snap() == want(pts(0, 400))
+    def state():
+        return (T.current_snapshot(path), T.list_snapshots(path),
+                sorted(os.listdir(T._data_dir(path))))
 
-    apply_pyramid_batch(pts(400, 700), 1, path, "lon", "lat", 8, 5)
+    apply(0, 400, 0)
+    assert snap() == want(pts(0, 400))
+    # replay of a committed batch: no-op
+    before = state()
+    apply(0, 400, 0)
+    assert snap() == want(pts(0, 400)) and state() == before
+
+    apply(400, 700, 1)
     after_two = want(pts(0, 700))
     assert snap() == after_two
-    apply_pyramid_batch(pts(400, 700), 1, path, "lon", "lat", 8, 5)
-    assert snap() == after_two
+    before = state()
+    apply(400, 700, 1)
+    assert snap() == after_two and state() == before
 
-    # crash window: v_2 fully written but _CURRENT still at v_1 — the
-    # replay must only repoint, not re-merge
-    apply_pyramid_batch(pts(700, 900), 2, path, "lon", "lat", 8, 5)
+    apply(700, 900, 2)
     after_three = want(pts(0, 900))
     assert snap() == after_three
-    with open(os.path.join(path, "_CURRENT"), "w") as fh:
-        fh.write(f"v_{1:020d}\n")  # simulate dying before the publish
-    assert snap() == after_two  # readers see the old committed version
-    apply_pyramid_batch(pts(700, 900), 2, path, "lon", "lat", 8, 5)
-    assert snap() == after_three
+    # at most current + previous are kept
+    s2 = T.current_snapshot(path)
+    s1 = T._load_manifest(path, s2)["parent"]
+    assert T.list_snapshots(path) == [s1, s2]
 
-    # pruning: only current + previous version dirs survive
-    versions = sorted(
-        d for d in os.listdir(path) if d.startswith("v_")
-    )
-    assert versions == [f"v_{1:020d}", f"v_{2:020d}"]
+    # crash window: batch 2's manifest committed but _CURRENT still at
+    # batch 1's snapshot — the replay must only repoint, not re-merge
+    T._point_current(path, s1)
+    assert snap() == after_two  # readers see the old committed snapshot
+    files = sorted(os.listdir(T._data_dir(path)))
+    apply(700, 900, 2)
+    assert snap() == after_three
+    assert state() == (s2, [s1, s2], files)
+
+    # an empty batch commits nothing
+    apply(900, 900, 3)
+    assert state() == (s2, [s1, s2], files)
 
 
 def test_tumbling_agg_cross_batch_accumulation(spark, tmp_path):
@@ -1123,12 +1158,21 @@ def test_stream_snapshot_append_empty_batches_commit_nothing(
 
 
 def test_stream_snapshot_append_runs_no_emptiness_probe(
-        spark, stream_dirs, monkeypatch, replication_gz):
-    """Structural pin: the sink never calls DataFrame.isEmpty (one Spark
-    pass per micro-batch). A replication stream whose first file holds
-    an empty <osm/> drains with isEmpty raising, commits nothing for it,
-    and commits the next file's 25 changesets as the table's first
-    snapshot."""
+        spark, stream_dirs, monkeypatch, replication_gz, tmp_path):
+    """Structural pin: the append, upsert and pyramid sinks never call
+    DataFrame.isEmpty (one Spark pass per micro-batch). A replication
+    stream whose first file holds an empty <osm/> drains with isEmpty
+    raising, commits nothing for it, and commits the next file's 25
+    changesets as the table's first snapshot. stream_upsert and
+    stream_pyramid drains that interleave zero-row parquet files commit
+    only the non-empty batches and leave no file behind for the empty
+    ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osmcha_spark.operators.tiles import tile_pyramid
+    from osmcha_spark.streaming import stream_pyramid, stream_upsert
+
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
 
     from osmcha_spark.sources import tables as T
@@ -1151,6 +1195,55 @@ def test_stream_snapshot_append_runs_no_emptiness_probe(
     assert T.list_snapshots(table) == [0]
     assert T._load_manifest(table, 0)["commit_id"] == "stream-batch-1"
     assert T.read_snapshot(spark, table).count() == 25
+
+    def drain(sink, name, ddl, schema, batches):
+        """Files e0, b1, e2, b3 (e = zero rows), picked up in that
+        order, one per micro-batch."""
+        src = str(tmp_path / f"{name}_in")
+        os.makedirs(src)
+        for i, rows in enumerate(batches):
+            tbl = pa.Table.from_pylist(rows, schema=schema)
+            f = os.path.join(src, f"{i:02d}.parquet")
+            pq.write_table(tbl, f)
+            os.utime(f, (i + 1, i + 1))
+        ss = spark.readStream.schema(ddl) \
+            .option("maxFilesPerTrigger", 1).parquet(src)
+        out = str(tmp_path / name)
+        sink(ss, out, str(tmp_path / f"{name}_ckpt")).awaitTermination()
+        assert [T._load_manifest(out, s)["commit_id"]
+                for s in T.list_snapshots(out)] == \
+            [f"stream-{name}-1", f"stream-{name}-3"]
+        assert set(os.listdir(T._data_dir(out))) == {
+            f["name"] for s in T.list_snapshots(out)
+            for f in T.snapshot_files(out, s)}
+        return T.read_snapshot(spark, out)
+
+    kv = pa.schema([("id", pa.int64()), ("part", pa.string()),
+                    ("v", pa.int64())])
+    got = drain(
+        lambda ss, out, ck: stream_upsert(ss, out, key="id",
+                                          partition_col="part",
+                                          checkpoint_dir=ck),
+        "upsert", "id long, part string, v long", kv,
+        [[], [{"id": 1, "part": "p1", "v": 10}], [],
+         [{"id": 1, "part": "p1", "v": 11},
+          {"id": 2, "part": "p2", "v": 20}]])
+    assert {r.id: r.v for r in got.collect()} == {1: 11, 2: 20}
+
+    ll = pa.schema([("id", pa.int64()), ("lon", pa.float64()),
+                    ("lat", pa.float64())])
+    pts = [{"id": i, "lon": (i * 37 % 360) - 180.0,
+            "lat": (i * 11 % 180) - 90.0} for i in range(40)]
+    got = drain(
+        lambda ss, out, ck: stream_pyramid(ss, out, "lon", "lat", 6, 4,
+                                           checkpoint_dir=ck),
+        "pyramid", "id long, lon double, lat double", ll,
+        [[], pts[:25], [], pts[25:]])
+    want = tile_pyramid(
+        spark.createDataFrame(pts, "id long, lon double, lat double"),
+        "lon", "lat", 6, 4)
+    assert {tuple(r) for r in got.select("level", "cell", "n").collect()} \
+        == {tuple(r) for r in want.collect()}
 
 
 def test_stream_snapshot_merge_cdc_and_replay(spark, stream_dirs, tmp_path):

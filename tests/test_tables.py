@@ -1468,3 +1468,207 @@ def test_snapshot_replicate_delta_copy_and_guards(spark, tmp_path):
     T.snapshot_delete(S, "id", [7])
     with pytest.raises(ValueError, match="delete-free source"):
         T.snapshot_replicate(S, str(tmp_path / "dst3"))
+
+
+def test_snapshot_upsert_version_col_carries_untouched_partitions(
+        spark, tmp_path):
+    """Copy-on-write upsert on a partitioned table: ``version_col``
+    resolves a key that arrives twice WITHIN one batch (the highest
+    version wins), the merged partition holds updates and inserts, and
+    every untouched partition keeps its manifest entries — same file
+    names, same bytes, same md5 — across the commit."""
+    import hashlib
+
+    path = str(tmp_path / "t")
+    prior = spark.range(40).select(
+        F.col("id"),
+        F.lit("old").alias("v"),
+        F.lit(0).alias("ver"),
+        F.pmod("id", F.lit(4)).cast("int").alias("part"),
+    )
+    T.snapshot_create(prior, path, partition_col="part")
+
+    def untouched():
+        out = {}
+        for f in T.snapshot_files(path):
+            if f["partition"] == "2":
+                continue  # the one partition the batch touches
+            with open(os.path.join(T._data_dir(path), f["name"]),
+                      "rb") as fh:
+                out[f["name"]] = (f["bytes"],
+                                  hashlib.md5(fh.read()).hexdigest())
+        return out
+
+    before = untouched()
+    # both updates land in part=2 (2%4 == 102%4 == 2); id 2 arrives twice
+    # with different versions — version_col must keep ver=2 only
+    updates = spark.createDataFrame(
+        [(2, "mid", 1, 2), (2, "new", 2, 2), (102, "ins", 1, 2)],
+        "id long, v string, ver int, part int",
+    )
+    T.snapshot_upsert(updates, path, key="id", version_col="ver")
+    assert before and untouched() == before, \
+        "untouched partitions were rewritten"
+    got = {
+        r["id"]: (r["v"], r["part"])
+        for r in T.read_snapshot(spark, path).collect()
+    }
+    assert len(got) == 41  # 40 prior + 1 insert
+    assert got[2] == ("new", 2)        # updated, max version won
+    assert got[102] == ("ins", 2)      # inserted into the touched part
+    assert got[0] == ("old", 0) and got[7] == ("old", 3)  # untouched
+
+
+def test_snapshot_compact_bins_content_idempotence(spark, tmp_path):
+    """snapshot_compact (q109) beyond the gate's 1-bin case: a partition
+    whose bytes exceed target_bytes plans MULTIPLE bins (more than one
+    file, never more than ceil(bytes / target)), content survives
+    row-for-row, and a second run is a no-op — the small-file guard
+    keeps the freshly written, better-compressed bins from re-planning
+    fewer bins and rewriting forever; the manifest stays byte-identical."""
+    import hashlib
+    import math
+
+    path = str(tmp_path / "t")
+    df = spark.range(0, 4000).select(
+        F.col("id"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        F.pmod(F.col("id"), F.lit(2)).cast("int").alias("part"),
+    )
+    T.snapshot_create(df.repartition(16), path, partition_col="part")
+
+    def by_part():
+        out: dict = {}
+        for f in T.snapshot_files(path):
+            out.setdefault(f["partition"], []).append(f)
+        return out
+
+    def rows():
+        return sorted((r.id, r.payload, r.part)
+                      for r in T.read_snapshot(spark, path).collect())
+
+    listing = by_part()
+    assert all(len(fs) == 16 for fs in listing.values())
+    target = max(1, sum(f["bytes"] for f in listing["0"]) // 3)
+    before_rows = rows()
+
+    # target = ~1/3 of a partition's bytes -> 3-4 bins per partition
+    assert T.snapshot_compact(spark, path, target_bytes=target) is not None
+    for val, fs in by_part().items():
+        bins = math.ceil(sum(f["bytes"] for f in listing[val]) / target)
+        assert 2 <= len(fs) <= bins
+    assert rows() == before_rows
+
+    def digest():
+        out = {}
+        for f in T.snapshot_files(path):
+            with open(os.path.join(T._data_dir(path), f["name"]),
+                      "rb") as fh:
+                out[f["name"]] = (f["bytes"],
+                                  hashlib.md5(fh.read()).hexdigest())
+        return out
+
+    manifest = digest()
+    sid = T.current_snapshot(path)
+    assert T.snapshot_compact(spark, path, target_bytes=target) is None
+    assert T.current_snapshot(path) == sid
+    assert digest() == manifest
+
+
+@pytest.mark.parametrize("verb", ["mv_sync", "join_mv_sync", "replicate"])
+def test_sync_frontier_survives_crash_before_tag(
+        spark, tmp_path, monkeypatch, verb):
+    """A sync's applied frontier is the commit_id of the destination's
+    current manifest, written atomically with the commit. A crash right
+    after the commit (before its label tag is written), a retry (a
+    no-op), one more base append and a second sync must apply every
+    base row exactly once. ``replicate`` crashes on the FIRST-ever
+    replication, whose retry leaves the replica without any tag."""
+    from osmcha_spark.operators.incremental import join_mv_sync, mv_sync
+
+    base, side, dst = (str(tmp_path / x) for x in ("base", "side", "dst"))
+    schema = "k long, g long, cents long"
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), schema)
+
+    T.snapshot_create(rows((1, 1, 5)), base, partition_col="g")
+    T.snapshot_create(spark.createDataFrame([(1, 100)], "g long, o long"),
+                      side)
+
+    def sync():
+        if verb == "mv_sync":
+            return mv_sync(spark, base, dst, "g", "cents")
+        if verb == "join_mv_sync":
+            return join_mv_sync(spark, base, side, dst, "g",
+                                ["k", "cents"], ["o"])
+        return T.snapshot_replicate(base, dst)
+
+    def want():
+        b = T.read_snapshot(spark, base)
+        if verb == "mv_sync":
+            return b.groupBy("g").agg(
+                F.count(F.lit(1)).cast("long").alias("n_rows"),
+                F.sum("cents").cast("long").alias("sum_cents"))
+        if verb == "join_mv_sync":
+            return b.join(T.read_snapshot(spark, side), "g") \
+                .select("g", "k", "cents", "o")
+        return b
+
+    real_tag = T.snapshot_tag
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(T, "snapshot_tag", real_tag)
+        raise RuntimeError("crash between the commit and its tag")
+
+    if verb != "replicate":
+        sync()  # the view's first build
+        T.snapshot_append(rows((2, 1, 10)), base)
+    monkeypatch.setattr(T, "snapshot_tag", crash_once)
+    with pytest.raises(RuntimeError, match="crash between"):
+        sync()
+    assert sync() is None  # the retry finds its commit: nothing to do
+    T.snapshot_append(rows((3, 1, 7)), base)
+    assert sync() is not None
+    got = T.read_snapshot(spark, dst).select(*want().columns)
+    assert got.count() == want().count()
+    assert got.exceptAll(want()).count() == 0
+    assert want().exceptAll(got).count() == 0
+
+
+def test_join_mv_sync_delta_with_more_keys_than_partitions(
+        spark, tmp_path, monkeypatch):
+    """join_mv_sync collects at most (#partition values + 1) delta keys
+    for its partition-pruned side scan: a delta with more distinct keys
+    than the partitioned side has partitions falls back to the full side
+    scan and gives the same MV rows as the full join."""
+    from osmcha_spark.operators.incremental import join_mv_sync
+
+    A, B, MV = (str(tmp_path / x) for x in ("a", "b", "mv"))
+    T.snapshot_create(spark.range(0, 3).selectExpr("id AS key",
+                                                   "id * 11 AS nat"), A)
+    orde = spark.range(0, 9).selectExpr("id % 3 AS key", "id AS oid")
+    T.snapshot_create(orde, B, partition_col="key")  # 3 partitions
+    join_mv_sync(spark, A, B, MV, "key", ["nat"], ["oid"])
+
+    reads = []
+    real_read = T.read_snapshot
+
+    def spy(spark_, path, *args, **kwargs):
+        reads.append((path, kwargs.get("partitions")))
+        return real_read(spark_, path, *args, **kwargs)
+
+    monkeypatch.setattr(T, "read_snapshot", spy)
+    more = spark.range(0, 10).selectExpr("id AS key", "id * 13 AS nat")
+    T.snapshot_append(more, A)  # 10 distinct keys > 3 partitions of B
+    assert join_mv_sync(spark, A, B, MV, "key", ["nat"], ["oid"]) \
+        is not None
+    assert (B, None) in reads  # the full side scan, not a pruned one
+    monkeypatch.setattr(T, "read_snapshot", real_read)
+
+    full = T.read_snapshot(spark, A).join(orde, "key") \
+        .select("key", "nat", "oid")
+    mv = T.read_snapshot(spark, MV).select("key", "nat", "oid")
+    assert mv.count() == full.count()
+    assert mv.exceptAll(full).count() == 0
+    assert full.exceptAll(mv).count() == 0

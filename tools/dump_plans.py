@@ -576,8 +576,8 @@ def main() -> None:
     ivf_index_append(pq_emb.where(F.col("vec_id") % 3 == 0), ivf_path)
     sections.append((
         "Stored IVF index serve (q110)",
-        "expect: PartitionFilters with centroid_id IN (<probed lists "
-        "only>) on the lists scan — the static probe pruning that reads "
+        "expect: the lists scan lists only the probed lists' data "
+        "files (the snapshot manifest selects them before planning) — "
         "nprobe lists per query and nothing else; broadcast probes, "
         "window top-k, no Python eval",
         formatted(ivf_index_search(spark, ivf_path, pq_q, k=5, nprobe=2)),

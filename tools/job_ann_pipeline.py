@@ -11,12 +11,14 @@ list rewrites, then serve a query batch from the maintained index.
 
 Flow (R75, the q110 composition run the way a cluster would):
 
-    1. bootstrap: build inverted lists (centroid_id partition dirs) +
-       the immutable codebook from the initial corpus slice,
+    1. bootstrap: build inverted lists (a centroid_id-partitioned
+       snapshot table) + the immutable codebook from the initial
+       corpus slice,
     2. append: assign the new batch against the STORED quantizer and
-       upsert — only the lists receiving vectors are rewritten,
-    3. serve: probe-pruned top-k for the query batch (the lists scan
-       carries a literal centroid_id IN filter).
+       upsert — one commit that rewrites only the lists receiving
+       vectors,
+    3. serve: probe-pruned top-k for the query batch (the lists
+       table's manifest selects only the probed lists' files).
 
 At 10^12 vectors step 2 is the minutely operating cost (a handful of
 list partitions) and step 3 reads nprobe lists per query — neither ever
@@ -55,10 +57,11 @@ def main() -> None:
         ivf_index_build,
         ivf_index_search,
     )
+    from osmcha_spark.sources import tables as T
 
     emb = spark.read.parquet(args.embeddings)
     lists_dir = os.path.join(args.index, "lists")
-    bootstrap = not os.path.exists(os.path.join(lists_dir, "_SUCCESS"))
+    bootstrap = T.current_snapshot(lists_dir) is None
     if bootstrap:
         # bootstrap slice + append batch: the same split q110 gates
         ivf_index_build(
@@ -73,12 +76,10 @@ def main() -> None:
     served = ivf_index_search(
         spark, args.index, queries, k=args.k, nprobe=args.nprobe
     )
-    n_lists = sum(
-        1 for d in os.listdir(lists_dir) if d.startswith("centroid_id=")
-    )
+    n_lists = len({f["partition"] for f in T.snapshot_files(lists_dir)})
     summary = {
         "bootstrap": bootstrap,
-        "index_rows": spark.read.parquet(lists_dir).count(),
+        "index_rows": T.read_snapshot(spark, lists_dir).count(),
         "n_lists": n_lists,
         "served_rows": served.count(),
         "k": args.k,

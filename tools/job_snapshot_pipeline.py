@@ -11,11 +11,11 @@ maintenance (compaction + snapshot expiry) runs in the same job.
         --aux-dir tests/data --table /tmp/verdicts_tbl \
         --keep-snapshots 3
 
-Contrast with tools/job_incremental_pipeline.py (same analysis, plain
-partitioned parquet + dynamic overwrite): here the commit protocol
-upgrades the operational story —
+The commit protocol is the operational story —
 
-    1. scan replication batch → full suspicion analysis (identical),
+    1. scan the replication batch (S1: gzip-XML → rows) and run the
+       full suspicion analysis (P2-P12, A1-A4) against the
+       action-count and user dims,
     2. commit as snapshot N via copy-on-write upsert: untouched
        partitions are carried into the new manifest BY FILE REFERENCE
        (zero read, zero write); the commit_id is a fingerprint of the
@@ -101,6 +101,7 @@ def main() -> None:
     )
 
     prev = T.current_snapshot(args.table)
+    known = set(T.list_snapshots(args.table))
     if prev is None:
         sid = T.snapshot_create(verdicts, args.table,
                                 partition_col="bucket",
@@ -114,7 +115,7 @@ def main() -> None:
         after = T.snapshot_files(args.table, sid)
         carried = sum(1 for f in after if f["name"] in before)
         bootstrap = False
-    replayed = (prev is not None and sid == prev)
+    replayed = sid in known  # the commit_id found its manifest
 
     compacted = T.snapshot_compact(
         spark, args.table, target_bytes=args.target_file_bytes)

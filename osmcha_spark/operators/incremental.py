@@ -175,12 +175,13 @@ def mv_sync(
     MV schema: ``(group_col, n_rows, sum_<value_col>)``, partitioned by
     ``group_col``. Every commit carries ``commit_id="sync-<base_sid>"``
     and that id IS the applied frontier (read back from the MV's
-    current manifest, atomic with the commit) — replays repoint instead
-    of double-counting (exactly-once at the table level), and no crash
-    between the commit and its ``sync-<base_sid>`` tag (a label that
-    also pins the manifest against expiry) can lose the frontier.
+    current manifest, atomic with the commit; nothing is written after
+    it, so no crash can lose the frontier) — a replay never
+    double-counts: it only heals a lost repoint by fast-forward
+    (exactly-once at the table level).
 
-    Returns the new MV snapshot id, or None when already up to date.
+    Returns the new (or healed) MV snapshot id, or None when already up
+    to date.
     A rewrite/compaction/delete on the base inside the sync window
     makes :func:`~osmcha_spark.sources.tables.snapshot_changes` RAISE
     (append-only contract, q133) — the MV must then be rebuilt by
@@ -198,22 +199,15 @@ def mv_sync(
             F.sum(value_col).cast("long").alias(sum_col),
         )
 
-    if T.current_snapshot(mv_path) is None:
+    cid = f"sync-{cur}"
+    head = T.current_snapshot(mv_path)
+    if T._replay(mv_path, cid) is not None:
+        now = T.current_snapshot(mv_path)
+        return now if now != head else None  # healed, or up to date
+    if head is None:
         full = T.read_snapshot(spark, base_path, cur)
-        T.snapshot_create(_agg(full), mv_path, partition_col=group_col,
-                          commit_id=f"sync-{cur}")
-        T.snapshot_tag(mv_path, f"sync-{cur}")
-        return T.current_snapshot(mv_path)
-
-    done = T._find_commit(mv_path, f"sync-{cur}")
-    if done is not None:
-        # this base snapshot was already folded in; heal a lost
-        # pointer (crash between commit and repoint) instead of
-        # silently staying stale
-        if T.current_snapshot(mv_path) != done:
-            T._point_current(mv_path, done)
-            return done
-        return None
+        return T.snapshot_create(_agg(full), mv_path,
+                                 partition_col=group_col, commit_id=cid)
     front = T._applied_frontier(mv_path, "sync", 1)
     if front is None:
         raise ValueError(f"{mv_path} has no sync-* commit: not a "
@@ -230,10 +224,7 @@ def mv_sync(
         .agg(F.sum("n_rows").cast("long").alias("n_rows"),
              F.sum(sum_col).cast("long").alias(sum_col))
     )
-    sid = T.snapshot_upsert(upd, mv_path, key=group_col,
-                            commit_id=f"sync-{cur}")
-    T.snapshot_tag(mv_path, f"sync-{cur}")
-    return sid
+    return T.snapshot_upsert(upd, mv_path, key=group_col, commit_id=cid)
 
 
 def join_mv_sync(
@@ -260,9 +251,11 @@ def join_mv_sync(
     delta — never a rewrite.
 
     The applied frontier is the PAIR of base snapshot ids, carried as
-    the commit_id ``sync-<a_sid>-<b_sid>`` of every MV commit (and
-    tagged with the same string as a label) — replays repoint, never
-    double-append (the mv_sync exactly-once discipline); a
+    the commit_id ``sync-<a_sid>-<b_sid>`` of every MV commit — a
+    replay only heals a lost repoint by fast-forward, never
+    double-appends, and returns None when the view is up to date, also
+    after a compaction of the view (the mv_sync exactly-once
+    discipline); a
     frontier-advancing sync with an EMPTY delta still commits (the
     frontier must move). A rewrite/compaction/
     delete on either base inside the window makes snapshot_changes
@@ -303,19 +296,15 @@ def join_mv_sync(
                 return T.read_snapshot(spark, path, sid, partitions=keys)
         return T.read_snapshot(spark, path, sid)
 
-    if T.current_snapshot(mv_path) is None:
+    cid = f"sync-{ca}-{cb}"
+    head = T.current_snapshot(mv_path)
+    if T._replay(mv_path, cid) is not None:
+        now = T.current_snapshot(mv_path)
+        return now if now != head else None  # healed, or up to date
+    if head is None:
         full = _proj(T.read_snapshot(spark, a_path, ca), a_cols).join(
             _proj(T.read_snapshot(spark, b_path, cb), b_cols), key)
-        T.snapshot_create(full, mv_path, commit_id=f"sync-{ca}-{cb}")
-        T.snapshot_tag(mv_path, f"sync-{ca}-{cb}")
-        return T.current_snapshot(mv_path)
-
-    done = T._find_commit(mv_path, f"sync-{ca}-{cb}")
-    if done is not None:
-        if T.current_snapshot(mv_path) != done:
-            T._point_current(mv_path, done)
-            return done
-        return None
+        return T.snapshot_create(full, mv_path, commit_id=cid)
     # only a sync-<a_sid>-<b_sid> commit is this view's frontier
     front = T._applied_frontier(mv_path, "sync", 2)
     if front is None:
@@ -341,6 +330,4 @@ def join_mv_sync(
     else:
         mv_schema = T.read_snapshot(spark, mv_path)
         delta = mv_schema.limit(0)
-    sid = T.snapshot_append(delta, mv_path, commit_id=f"sync-{ca}-{cb}")
-    T.snapshot_tag(mv_path, f"sync-{ca}-{cb}")
-    return sid
+    return T.snapshot_append(delta, mv_path, commit_id=cid)

@@ -57,13 +57,19 @@ def load_table(
 #      no checkpoint-before-write);
 #   2. write the manifest to a temp name, link it to s_<n>.json —
 #      manifest existence is the commit point;
-#   3. os.replace the _CURRENT pointer.
-# Crash before (2): the new files are invisible (reads go through the
-# manifest) and vacuum() reclaims them. Crash between (2) and (3):
-# readers keep the old consistent snapshot; a replay bearing the same
-# commit_id finds its manifest and just repoints. Anything a writer
-# must remember across commits (a sync frontier) lives in the commit_id
-# itself, so it lands in step (2) with the data; tags are labels.
+#   3. os.replace the _CURRENT pointer (or a branch head).
+# Every committing verb therefore has exactly two crash points, both
+# covered by ONE replay rule (_replay). Crash before (2): the new files
+# and any manifest temp are invisible (reads go through the manifest)
+# and vacuum() reclaims them; the replay finds no commit and runs the
+# verb again. Crash between (2) and (3): readers keep the old
+# consistent snapshot; a replay bearing the same commit_id finds its
+# manifest and moves the ref only as a fast-forward, so a lost repoint
+# heals while a later commit built on the replayed one (a compaction)
+# or a fork after a rollback stays current. Nothing is written after
+# (3): table properties (partition spec, schema, bloom_cols, CHECK
+# constraints) live in the manifest, and anything a writer must
+# remember across commits (a sync frontier) lives in the commit_id.
 #
 # Reads prune FILES from the manifest (partition-value selection happens
 # driver-side on metadata, before Spark ever lists a directory), then the
@@ -262,34 +268,24 @@ def _bloom_maybe_contains(bloom: dict, value) -> bool:
     )
 
 
-def _checks_file(path: str) -> str:
-    return os.path.join(path, "_CHECKS.json")
-
-
 def table_checks(path: str) -> list[str]:
     """The table's write-time CHECK constraints (may be empty)."""
-    f = _checks_file(path)
-    if not os.path.exists(f):
+    cur = current_snapshot(path)
+    if cur is None:
         return []
-    with open(f) as fh:
-        return list(_json.load(fh))
+    return list(_load_manifest(path, cur).get("checks") or [])
 
 
-def _set_checks(path: str, checks: list[str]) -> None:
-    tmp = _checks_file(path) + ".tmp"
-    with open(tmp, "w") as fh:
-        _json.dump(list(checks), fh)
-    os.replace(tmp, _checks_file(path))
-
-
-def _validate_checks(df: DataFrame, checks: list[str], op: str) -> None:
+def _validate_checks(df: DataFrame, checks: list[str] | None,
+                     op: str) -> None:
     """Write-time enforcement (Delta's CHECK constraints): ONE
     aggregation pass counts violators of every expression at once —
     NULL check results count as violations (a constraint must PROVE
     itself, Delta/ANSI semantics) — and the write refuses with the
-    per-check counts. Checks are TABLE-scoped (one `_CHECKS.json` at
-    the root, set at create), not snapshot-versioned — the documented
-    V1 simplification vs Delta's versioned metadata."""
+    per-check counts. Checks are a table property of the manifest, like
+    ``bloom_cols``: set at create and carried by every later commit, so
+    they land atomically with the first snapshot and each snapshot
+    records the checks its writes were validated against."""
     if not checks:
         return
     from pyspark.sql import functions as F
@@ -470,14 +466,18 @@ def snapshot_publish(path: str, snapshot: int) -> int:
     return sid
 
 
-def _commit(path: str, files: list[dict], partition_col: str | None,
+_TABLE_PROPS = ("partition_col", "partition_transform", "schema",
+                "bloom_cols", "deletes", "checks")
+
+
+def _commit(path: str, files: list[dict], base: dict | None,
             parent: int | None, commit_id: str | None,
-            schema: dict | None = None,
-            bloom_cols: list[str] | None = None,
-            deletes: list[dict] | None = None,
-            publish: bool = True,
-            transform: dict | None = None) -> int:
+            publish: bool = True, **props) -> int:
     """Steps (2)+(3) of the protocol: atomic manifest, then repoint.
+
+    The manifest carries the table properties (``_TABLE_PROPS``) of
+    ``base`` — the manifest the verb read, None for a create — except
+    the ones the verb overrides in ``props``.
 
     Every entry (data file or equality-delete file) is stamped with the
     SEQUENCE NUMBER of the commit that first introduced it (``seq`` =
@@ -485,24 +485,24 @@ def _commit(path: str, files: list[dict], partition_col: str | None,
     sequence numbers, the thing that scopes equality deletes: a delete
     applies to a data file iff ``file.seq < delete.seq``, so re-appends
     of a deleted key are never retro-deleted."""
+    props = {k: (base or {}).get(k) for k in _TABLE_PROPS} | props
+    props["deletes"] = list(props["deletes"] or [])
     os.makedirs(_snapshots_dir(path), exist_ok=True)
     existing = list_snapshots(path)
-    sid = (max(existing) + 1) if existing else 0
+    sid = existing[-1] + 1 if existing else 0
     for f in files:
         f.setdefault("seq", sid)
         # partition-spec evolution (q158): every entry remembers the
         # spec column it was WRITTEN under; carried entries keep theirs,
         # so after snapshot_evolve_partition old files stay correctly
         # interpreted (and never wrongly pruned) under the new spec
-        f.setdefault("spec_col", partition_col)
-    for d in (deletes or []):
+        f.setdefault("spec_col", props["partition_col"])
+    for d in props["deletes"]:
         d.setdefault("seq", sid)
-    prev_ts = 0
-    if existing:
-        prev_ts = max(
-            int(_load_manifest(path, e).get("committed_at_us") or 0)
-            for e in existing
-        )
+    # the highest id holds the newest stamp: every commit stamps past
+    # it, and expire_snapshots always keeps it — one manifest read
+    prev_ts = int(_load_manifest(path, existing[-1])
+                  .get("committed_at_us") or 0) if existing else 0
     import time as _time
 
     manifest = {
@@ -513,13 +513,9 @@ def _commit(path: str, files: list[dict], partition_col: str | None,
         # commits land inside one clock tick
         "committed_at_us": max(int(_time.time() * 1_000_000),
                                prev_ts + 1),
-        "partition_col": partition_col,
-        "partition_transform": transform,
         "commit_id": commit_id,
-        "schema": schema,
-        "bloom_cols": bloom_cols,
+        **props,
         "files": files,
-        "deletes": deletes or [],
     }
     tmp = _manifest_file(path, sid) + f".tmp-{_uuid.uuid4().hex}"
     with open(tmp, "w") as fh:
@@ -655,13 +651,38 @@ def _find_commit(path: str, commit_id: str) -> int | None:
     return None
 
 
+def _replay(path: str, commit_id: str | None, branch: str | None = None,
+            publish: bool = True) -> int | None:
+    """The one replay rule of every committing verb: the snapshot a
+    previous run already committed under ``commit_id``, or None (run
+    the verb). A found commit moves its ref — ``branch``'s head, else
+    main; nothing for a staged ``publish=False`` commit — only as a
+    FAST-FORWARD: when the ref is unset or a proper ancestor of the
+    commit. So a repoint lost between the manifest link and the repoint
+    heals, and a later commit built on the replayed one (a compaction)
+    or a fork after a rollback stays current."""
+    if commit_id is None:
+        return None
+    done = _find_commit(path, commit_id)
+    if done is None or (branch is None and not publish):
+        return done
+    head = current_snapshot(path) if branch is None \
+        else resolve_branch(path, branch)
+    if head is None or (head != done and _is_ancestor(path, head, done)):
+        if branch is None:
+            _point_current(path, done)
+        else:
+            _point_branch(path, branch, done)
+    return done
+
+
 def _applied_frontier(path: str, prefix: str, arity: int) -> tuple | None:
     """The source snapshot ids a sync-maintained table last applied,
     parsed from the ``<prefix>-<sid>[-<sid>...]`` commit_id (``arity``
     ids) of its current manifest. The commit_id is written in the same
     atomic step as the data it describes, so no crash can separate the
-    frontier from the commit (a tag written after the commit can be
-    lost). Commits stamped otherwise — None, like a compaction, or a
+    frontier from the commit. Commits stamped otherwise — None, like a
+    compaction, or a
     foreign id — are walked past via ``parent``; None when no retained
     ancestor carries a matching stamp."""
     sid = current_snapshot(path)
@@ -839,29 +860,26 @@ def snapshot_create(df: DataFrame, path: str,
     later write's input rows (create/append/upsert/merge; q196): a
     violating batch refuses atomically with per-check violation counts
     before any file lands, NULL results counting as violations
-    (Delta/ANSI CHECK semantics). Table-scoped, set once at create
-    (see :func:`_validate_checks` for the V1 scope note): the sidecar
-    is written only after the commit lands, so a refused or crashed
-    create leaves no constraint set behind, and a ``commit_id`` replay
-    declaring different checks than the table's raises instead of
-    rewriting them.
+    (Delta/ANSI CHECK semantics). A table property of the manifest,
+    set once at create and carried by every later commit (see
+    :func:`_validate_checks`): the checks land with the create's own
+    commit, so a refused or crashed create leaves no constraint set
+    behind, and a ``commit_id`` replay declaring different checks than
+    the replayed commit's raises instead of rewriting them.
 
     ``_skip_empty`` (the streaming sink's) commits nothing and returns
     None when df turns out to have no rows."""
     os.makedirs(path, exist_ok=True)
     checks = list(checks or [])
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            created_with = table_checks(path)
-            if checks != created_with:
-                raise ValueError(
-                    f"snapshot_create replay of {commit_id!r} declares "
-                    f"checks {checks} but the table was created with "
-                    f"{created_with}; checks are set once, at create")
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        created_with = list(_load_manifest(path, done).get("checks") or [])
+        if checks != created_with:
+            raise ValueError(
+                f"snapshot_create replay of {commit_id!r} declares "
+                f"checks {checks} but the table was created with "
+                f"{created_with}; checks are set once, at create")
+        return done
     _validate_checks(df, checks, "snapshot_create")
     tr = None
     if partition_transform is not None:
@@ -887,12 +905,10 @@ def snapshot_create(df: DataFrame, path: str,
                          transform=tr, skip_empty=_skip_empty)
     if files is None:
         return None
-    sid = _commit(path, files, partition_col, None, commit_id,
-                  schema=_schema_dict(df), bloom_cols=bloom_cols,
-                  transform=tr)
-    if checks:
-        _set_checks(path, checks)
-    return sid
+    return _commit(path, files, None, None, commit_id,
+                   partition_col=partition_col, partition_transform=tr,
+                   schema=_schema_dict(df), bloom_cols=bloom_cols,
+                   checks=checks)
 
 
 def snapshot_files(path: str, snapshot: int | None = None,
@@ -1240,12 +1256,9 @@ def snapshot_delete(path: str, key_col: str, keys: list,
     import pyarrow as _pa
     import pyarrow.parquet as _papq
 
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
@@ -1270,11 +1283,8 @@ def snapshot_delete(path: str, key_col: str, keys: list,
         "n_keys": len(keys),
         "bytes": os.path.getsize(dest),
     }
-    return _commit(path, man["files"], man["partition_col"], cur,
-                   commit_id, schema=schema,
-                   bloom_cols=man.get("bloom_cols"),
-                   deletes=list(man.get("deletes") or []) + [entry],
-                   transform=man.get("partition_transform"))
+    return _commit(path, man["files"], man, cur, commit_id,
+                   deletes=list(man.get("deletes") or []) + [entry])
 
 
 def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
@@ -1363,17 +1373,14 @@ def snapshot_delete_positions(path: str, positions: list,
     import pyarrow as _pa
     import pyarrow.parquet as _papq
 
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
     man = _load_manifest(path, cur)
-    positions = [(str(f), int(p)) for f, p in positions]
+    positions =[(str(f), int(p)) for f, p in positions]
     if not positions:
         return cur
     have = {f["name"] for f in man["files"]}
@@ -1400,11 +1407,8 @@ def snapshot_delete_positions(path: str, positions: list,
         "n_keys": len(positions),
         "bytes": os.path.getsize(dest),
     }
-    return _commit(path, man["files"], man["partition_col"], cur,
-                   commit_id, schema=man.get("schema"),
-                   bloom_cols=man.get("bloom_cols"),
-                   deletes=list(man.get("deletes") or []) + [entry],
-                   transform=man.get("partition_transform"))
+    return _commit(path, man["files"], man, cur, commit_id,
+                   deletes=list(man.get("deletes") or []) + [entry])
 
 
 def snapshot_metadata_agg(spark: SparkSession, path: str,
@@ -1584,59 +1588,33 @@ def snapshot_append(df: DataFrame, path: str,
     ``branch=name`` commits on a BRANCH (:func:`snapshot_branch`):
     the parent is the branch head, the branch pointer advances, and
     main never moves — multi-commit WAP. Replays (``commit_id``)
-    repoint the branch, not main. Publish the run with
+    fast-forward the branch, never main. Publish the run with
     :func:`snapshot_fast_forward`.
 
     An empty df still commits (a frontier may need to move);
     ``_skip_empty`` (the streaming sink's) commits nothing and returns
     None instead."""
-    if branch is not None:
-        base = resolve_branch(path, branch)
-        if commit_id is not None:
-            done = _find_commit(path, commit_id)
-            if done is not None:
-                if resolve_branch(path, branch) != done:
-                    _point_branch(path, branch, done)
-                return done
-        man = _load_manifest(path, base)
-        _validate_checks(df, table_checks(path), "snapshot_append")
-        schema = _merged_schema(man.get("schema"), df)
-        bloom_cols = man.get("bloom_cols")
-        new_files = _write_files(df, path, man["partition_col"],
-                                 bloom_cols,
-                                 transform=man.get("partition_transform"),
-                                 skip_empty=_skip_empty)
-        if new_files is None:
-            return None
-        sid = _commit(path, man["files"] + new_files,
-                      man["partition_col"], base, commit_id,
-                      schema=schema, bloom_cols=bloom_cols,
-                      deletes=man.get("deletes"), publish=False,
-                      transform=man.get("partition_transform"))
-        _point_branch(path, branch, sid)
-        return sid
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if publish and current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
-    cur = current_snapshot(path)
+    done = _replay(path, commit_id, branch, publish)
+    if done is not None:
+        return done
+    cur = current_snapshot(path) if branch is None \
+        else resolve_branch(path, branch)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
     man = _load_manifest(path, cur)
-    _validate_checks(df, table_checks(path), "snapshot_append")
+    _validate_checks(df, man.get("checks"), "snapshot_append")
     schema = _merged_schema(man.get("schema"), df)
-    bloom_cols = man.get("bloom_cols")
-    new_files = _write_files(df, path, man["partition_col"], bloom_cols,
+    new_files = _write_files(df, path, man["partition_col"],
+                             man.get("bloom_cols"),
                              transform=man.get("partition_transform"),
                              skip_empty=_skip_empty)
     if new_files is None:
         return None
-    return _commit(path, man["files"] + new_files, man["partition_col"],
-                   cur, commit_id, schema=schema, bloom_cols=bloom_cols,
-                   deletes=man.get("deletes"), publish=publish,
-                   transform=man.get("partition_transform"))
+    sid = _commit(path, man["files"] + new_files, man, cur, commit_id,
+                  publish=publish and branch is None, schema=schema)
+    if branch is not None:
+        _point_branch(path, branch, sid)
+    return sid
 
 
 def snapshot_upsert(updates: DataFrame, path: str, key: str,
@@ -1661,21 +1639,15 @@ def snapshot_upsert(updates: DataFrame, path: str, key: str,
     from osmcha_spark.operators.incremental import upsert
 
     spark = updates.sparkSession
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            # heal a lost repoint; a later commit built on the replayed
-            # one (an in-line compaction) stays current
-            cur = current_snapshot(path)
-            if cur is None or not _is_ancestor(path, done, cur):
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
     man = _load_manifest(path, cur)
     _require_no_transform(man, "snapshot_upsert")
-    _validate_checks(updates, table_checks(path), "snapshot_upsert")
+    _validate_checks(updates, man.get("checks"), "snapshot_upsert")
     pcol = man["partition_col"]
     bloom_cols = man.get("bloom_cols")
     schema = _merged_schema(man.get("schema"), updates)
@@ -1689,8 +1661,8 @@ def snapshot_upsert(updates: DataFrame, path: str, key: str,
             return None
         # full rewrite: every applicable delete is materialized, so the
         # delete entries need not be carried
-        return _commit(path, files, None, cur, commit_id, schema=schema,
-                       bloom_cols=bloom_cols)
+        return _commit(path, files, man, cur, commit_id, schema=schema,
+                       deletes=None)
     _require_single_spec(man, "snapshot_upsert")
     affected = {
         str(r[0]) for r in updates.select(pcol).distinct().collect()
@@ -1716,9 +1688,8 @@ def snapshot_upsert(updates: DataFrame, path: str, key: str,
                              skip_empty=_skip_empty)
     if new_files is None:
         return None
-    return _commit(path, carried + new_files, pcol, cur, commit_id,
-                   schema=schema, bloom_cols=bloom_cols,
-                   deletes=man.get("deletes"))
+    return _commit(path, carried + new_files, man, cur, commit_id,
+                   schema=schema)
 
 
 def snapshot_merge_into(source: DataFrame, path: str, key: str,
@@ -1753,18 +1724,15 @@ def snapshot_merge_into(source: DataFrame, path: str, key: str,
     from pyspark.sql import functions as F
 
     spark = source.sparkSession
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
     man = _load_manifest(path, cur)
     _require_no_transform(man, "snapshot_merge_into")
-    _validate_checks(source, table_checks(path), "snapshot_merge_into")
+    _validate_checks(source, man.get("checks"), "snapshot_merge_into")
     pcol = man["partition_col"]
     bloom_cols = man.get("bloom_cols")
     schema = _merged_schema(man.get("schema"), source)
@@ -1815,9 +1783,8 @@ def snapshot_merge_into(source: DataFrame, path: str, key: str,
         .alias(c) for c in cols
     ])
     new_files = _write_files(merged, path, pcol, bloom_cols)
-    return _commit(path, carried + new_files, pcol, cur, commit_id,
-                   schema=schema, bloom_cols=bloom_cols,
-                   deletes=carried_deletes)
+    return _commit(path, carried + new_files, man, cur, commit_id,
+                   schema=schema, deletes=carried_deletes)
 
 
 def snapshot_compact(spark: SparkSession, path: str,
@@ -1881,11 +1848,7 @@ def snapshot_compact(spark: SparkSession, path: str,
             e["partition"] = pval
             e["spec_col"] = spec_col
         new_files.extend(batch)
-    return _commit(path, carried + new_files, man["partition_col"],
-                   cur, None, schema=man.get("schema"),
-                   bloom_cols=man.get("bloom_cols"),
-                   deletes=man.get("deletes"),
-                   transform=man.get("partition_transform"))
+    return _commit(path, carried + new_files, man, cur, None)
 
 
 def snapshot_rollback(path: str, snapshot: int) -> int:
@@ -1929,12 +1892,9 @@ def snapshot_evolve_partition(path: str, new_col: str | None,
     column NON-NULL (a null partition value writes the hive default
     bucket). Reference: no counterpart (osmcha is read-only); this is
     the engine-mandate table layer, same as the rest of the format."""
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
@@ -1950,9 +1910,8 @@ def snapshot_evolve_partition(path: str, new_col: str | None,
             )
     if new_col == man["partition_col"]:
         return cur  # no-op: the spec already is new_col
-    return _commit(path, man["files"], new_col, cur, commit_id,
-                   schema=schema, bloom_cols=man.get("bloom_cols"),
-                   deletes=man.get("deletes"))
+    return _commit(path, man["files"], man, cur, commit_id,
+                   partition_col=new_col)
 
 
 def snapshot_rewrite_partitions(spark: SparkSession, path: str,
@@ -1972,12 +1931,9 @@ def snapshot_rewrite_partitions(spark: SparkSession, path: str,
     old-spec bytes, not the table: after a spec change on a 100 TB
     table you pay for the history you migrate, never for the data that
     already landed under the new spec."""
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
@@ -1996,10 +1952,7 @@ def snapshot_rewrite_partitions(spark: SparkSession, path: str,
             *[os.path.join(_data_dir(path), f["name"]) for f in stale])
     df = _align(df, man.get("schema"))
     new_files = _write_files(df, path, pcol, man.get("bloom_cols"))
-    return _commit(path, carried + new_files, pcol, cur, commit_id,
-                   schema=man.get("schema"),
-                   bloom_cols=man.get("bloom_cols"),
-                   deletes=man.get("deletes"))
+    return _commit(path, carried + new_files, man, cur, commit_id)
 
 
 def snapshot_rewrite_sorted(spark: SparkSession, path: str,
@@ -2025,12 +1978,9 @@ def snapshot_rewrite_sorted(spark: SparkSession, path: str,
     bounded job whose output supersedes every prior file."""
     import math
 
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
@@ -2048,9 +1998,7 @@ def snapshot_rewrite_sorted(spark: SparkSession, path: str,
     # still holds one contiguous sort_col range — clustering survives,
     # at the cost of up to ranges x values files
     files = _write_files(df, path, pcol, man.get("bloom_cols"))
-    return _commit(path, files, pcol, cur, commit_id,
-                   schema=man.get("schema"),
-                   bloom_cols=man.get("bloom_cols"))
+    return _commit(path, files, man, cur, commit_id, deletes=None)
 
 
 def snapshot_rewrite_hilbert(spark: SparkSession, path: str,
@@ -2075,12 +2023,9 @@ def snapshot_rewrite_hilbert(spark: SparkSession, path: str,
 
     from osmcha_spark.geo.hilbert import hilbert_col
 
-    if commit_id is not None:
-        done = _find_commit(path, commit_id)
-        if done is not None:
-            if current_snapshot(path) != done:
-                _point_current(path, done)
-            return done
+    done = _replay(path, commit_id)
+    if done is not None:
+        return done
     cur = current_snapshot(path)
     if cur is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
@@ -2094,16 +2039,18 @@ def snapshot_rewrite_hilbert(spark: SparkSession, path: str,
     df = read_snapshot(spark, path, cur).repartitionByRange(n_files, key)
     pcol = man["partition_col"]
     files = _write_files(df, path, pcol, man.get("bloom_cols"))
-    return _commit(path, files, pcol, cur, commit_id,
-                   schema=man.get("schema"),
-                   bloom_cols=man.get("bloom_cols"))
+    return _commit(path, files, man, cur, commit_id, deletes=None)
 
 
 def expire_snapshots(path: str, keep_last: int = 2) -> list[int]:
     """Drop all but the newest ``keep_last`` manifests (the current one
     always survives) and vacuum files they exclusively referenced.
     Returns the expired ids. Bounded storage is what makes per-commit
-    snapshots viable at a minutely ingest cadence."""
+    snapshots viable at a minutely ingest cadence. ``keep_last`` must
+    be at least 1: the highest snapshot id holds the newest commit
+    stamp that the next commit stamps past."""
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     sids = list_snapshots(path)
     cur = current_snapshot(path)
     keep = set(sids[-keep_last:]) | ({cur} if cur is not None else set())
@@ -2119,7 +2066,8 @@ def expire_snapshots(path: str, keep_last: int = 2) -> list[int]:
 def vacuum(path: str) -> list[str]:
     """Delete data files referenced by NO committed manifest (crash
     orphans from step (1), files released by expire_snapshots) plus any
-    leftover staging dirs. Returns the removed file names."""
+    leftover staging dirs and manifest temps (a crash inside step (2)).
+    Returns the removed file names."""
     referenced: set[str] = set()
     for sid in list_snapshots(path):
         man = _load_manifest(path, sid)
@@ -2133,6 +2081,12 @@ def vacuum(path: str) -> list[str]:
         for name in os.listdir(ddir):
             if name.endswith(".parquet") and name not in referenced:
                 os.remove(os.path.join(ddir, name))
+                removed.append(name)
+    sdir = _snapshots_dir(path)
+    if os.path.isdir(sdir):
+        for name in os.listdir(sdir):
+            if ".json.tmp-" in name:
+                os.remove(os.path.join(sdir, name))
                 removed.append(name)
     for name in os.listdir(path):
         if name.startswith("_staging_"):
@@ -2151,9 +2105,10 @@ def snapshot_replicate(src_path: str, dst_path: str) -> int | None:
 
     Frontier = the ``repl-<src_sid>`` commit_id of dst's current
     manifest (:func:`_applied_frontier`; the mv_sync exactly-once
-    discipline: replays repoint, never re-copy); a ``repl-<src_sid>``
-    tag labels each replicated snapshot. First call = full copy of the
-    current file set.
+    discipline: a replay only heals a lost repoint by fast-forward,
+    never re-copies; :func:`snapshot_history` lists the frontiers).
+    First call = full copy of the current file set; the replica
+    inherits src's table properties (spec, schema, bloom_cols, checks).
     Contract: append-only ranges, like :func:`snapshot_changes` — a
     rewrite/compaction or an equality/position delete on src inside
     the window makes the file diff non-representable and this RAISES
@@ -2162,7 +2117,8 @@ def snapshot_replicate(src_path: str, dst_path: str) -> int | None:
     mid-copy simply overwrites identical bytes — the commit point
     remains dst's manifest link, crash-safe like every other commit.
 
-    Returns dst's new snapshot id, or None when already current.
+    Returns dst's new (or healed) snapshot id, or None when already
+    up to date.
     """
     cur = current_snapshot(src_path)
     if cur is None:
@@ -2174,15 +2130,10 @@ def snapshot_replicate(src_path: str, dst_path: str) -> int | None:
             "level deletes are not representable as a file copy); "
             "materialize them first (compact/rewrite), then resync"
         )
-    done = _find_commit(dst_path, f"repl-{cur}")
-    if done is not None:
-        if current_snapshot(dst_path) != done:
-            # heal a lost pointer (crash between commit and repoint)
-            _point_current(dst_path, done)
-            return done
-        return None  # already current: the mv_sync up-to-date contract
-
     dst_cur = current_snapshot(dst_path)
+    if _replay(dst_path, f"repl-{cur}") is not None:
+        now = current_snapshot(dst_path)
+        return now if now != dst_cur else None  # healed, or up to date
     if dst_cur is None:
         to_copy = list(man["files"])
         carried: list[dict] = []
@@ -2217,9 +2168,5 @@ def snapshot_replicate(src_path: str, dst_path: str) -> int | None:
     new_entries = [dict(f) for f in to_copy]
     for e in new_entries:
         e.pop("seq", None)  # dst stamps its own data sequence numbers
-    sid = _commit(dst_path, carried + new_entries, man["partition_col"],
-                  parent, f"repl-{cur}", schema=man.get("schema"),
-                  bloom_cols=man.get("bloom_cols"),
-                  transform=man.get("partition_transform"))
-    snapshot_tag(dst_path, f"repl-{cur}")
-    return sid
+    return _commit(dst_path, carried + new_entries, man, parent,
+                   f"repl-{cur}")

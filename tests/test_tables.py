@@ -586,7 +586,8 @@ def test_branch_commits_isolate_and_fast_forward(spark, tmp_path):
     """Branches (q148): commits on a branch advance the branch head
     only (main frozen); fast-forward publishes the whole run; a
     non-ancestor fast-forward (main moved since the cut) raises;
-    commit_id replay on a branch repoints the BRANCH, never main;
+    commit_id replay on a branch moves the BRANCH only by fast-forward,
+    never main;
     branch heads survive expire_snapshots; unknown branch raises."""
     path = str(tmp_path / "t")
     T.snapshot_create(_mk(spark, 40), path, partition_col="part")
@@ -606,13 +607,12 @@ def test_branch_commits_isolate_and_fast_forward(spark, tmp_path):
     assert T.read_snapshot(spark, path, branch="audit").count() == 43
     assert T.resolve_branch(path, "audit") == h2
 
-    # replaying the first branch commit repoints the branch to it
-    # (idempotent commit), and still never touches main
+    # replaying the first branch commit finds it (idempotent commit),
+    # keeps the newer head h2 built on it, and never touches main
     assert T.snapshot_append(b1, path, branch="audit",
                              commit_id="br-1") == h1
-    assert T.resolve_branch(path, "audit") == h1
+    assert T.resolve_branch(path, "audit") == h2
     assert T.current_snapshot(path) == s0
-    T.snapshot_branch(path, "audit", snapshot=h2)  # restore head
 
     ff = T.snapshot_fast_forward(path, "audit")
     assert ff == h2 and T.current_snapshot(path) == h2
@@ -1356,10 +1356,11 @@ def test_snapshot_check_constraints_refuse_bad_writes(spark, tmp_path):
 
 
 def test_snapshot_create_checks_written_after_commit(spark, tmp_path):
-    """_CHECKS.json lands only with a committed create: a create that
-    fails after validation leaves no constraint set behind, and a
-    commit_id replay may not swap the checks that governed the original
-    commit (same checks replay fine)."""
+    """Checks land only with a committed create (they are a property of
+    its manifest): a create that fails after validation leaves no
+    constraint set behind, and a commit_id replay may not swap the
+    checks that governed the original commit (same checks replay
+    fine)."""
     import pytest
 
     good = spark.createDataFrame([(1, 10)], "id long, cents long")
@@ -1367,7 +1368,7 @@ def test_snapshot_create_checks_written_after_commit(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown partition transform"):
         T.snapshot_create(good, p, checks=["cents >= 0"],
                           partition_transform=("bogus", 2, "id"))
-    assert not os.path.exists(os.path.join(p, "_CHECKS.json"))
+    assert T.table_checks(p) == []
     assert T.current_snapshot(p) is None
 
     s0 = T.snapshot_create(good, p, commit_id="c0",
@@ -1575,67 +1576,6 @@ def test_snapshot_compact_bins_content_idempotence(spark, tmp_path):
     assert digest() == manifest
 
 
-@pytest.mark.parametrize("verb", ["mv_sync", "join_mv_sync", "replicate"])
-def test_sync_frontier_survives_crash_before_tag(
-        spark, tmp_path, monkeypatch, verb):
-    """A sync's applied frontier is the commit_id of the destination's
-    current manifest, written atomically with the commit. A crash right
-    after the commit (before its label tag is written), a retry (a
-    no-op), one more base append and a second sync must apply every
-    base row exactly once. ``replicate`` crashes on the FIRST-ever
-    replication, whose retry leaves the replica without any tag."""
-    from osmcha_spark.operators.incremental import join_mv_sync, mv_sync
-
-    base, side, dst = (str(tmp_path / x) for x in ("base", "side", "dst"))
-    schema = "k long, g long, cents long"
-
-    def rows(*r):
-        return spark.createDataFrame(list(r), schema)
-
-    T.snapshot_create(rows((1, 1, 5)), base, partition_col="g")
-    T.snapshot_create(spark.createDataFrame([(1, 100)], "g long, o long"),
-                      side)
-
-    def sync():
-        if verb == "mv_sync":
-            return mv_sync(spark, base, dst, "g", "cents")
-        if verb == "join_mv_sync":
-            return join_mv_sync(spark, base, side, dst, "g",
-                                ["k", "cents"], ["o"])
-        return T.snapshot_replicate(base, dst)
-
-    def want():
-        b = T.read_snapshot(spark, base)
-        if verb == "mv_sync":
-            return b.groupBy("g").agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("cents").cast("long").alias("sum_cents"))
-        if verb == "join_mv_sync":
-            return b.join(T.read_snapshot(spark, side), "g") \
-                .select("g", "k", "cents", "o")
-        return b
-
-    real_tag = T.snapshot_tag
-
-    def crash_once(*args, **kwargs):
-        monkeypatch.setattr(T, "snapshot_tag", real_tag)
-        raise RuntimeError("crash between the commit and its tag")
-
-    if verb != "replicate":
-        sync()  # the view's first build
-        T.snapshot_append(rows((2, 1, 10)), base)
-    monkeypatch.setattr(T, "snapshot_tag", crash_once)
-    with pytest.raises(RuntimeError, match="crash between"):
-        sync()
-    assert sync() is None  # the retry finds its commit: nothing to do
-    T.snapshot_append(rows((3, 1, 7)), base)
-    assert sync() is not None
-    got = T.read_snapshot(spark, dst).select(*want().columns)
-    assert got.count() == want().count()
-    assert got.exceptAll(want()).count() == 0
-    assert want().exceptAll(got).count() == 0
-
-
 def test_join_mv_sync_delta_with_more_keys_than_partitions(
         spark, tmp_path, monkeypatch):
     """join_mv_sync collects at most (#partition values + 1) delta keys
@@ -1672,3 +1612,59 @@ def test_join_mv_sync_delta_with_more_keys_than_partitions(
     assert mv.count() == full.count()
     assert mv.exceptAll(full).count() == 0
     assert full.exceptAll(mv).count() == 0
+
+
+def test_expire_snapshots_refuses_keep_last_below_one(spark, tmp_path):
+    """keep_last=0 used to keep every manifest (``sids[-0:]``) and a
+    negative -k expired exactly the k oldest; both now raise before
+    anything is removed."""
+    path = str(tmp_path / "t")
+    T.snapshot_create(_mk(spark, 20), path, partition_col="part")
+    T.snapshot_append(_mk(spark, 5), path)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            T.expire_snapshots(path, keep_last=bad)
+    assert T.list_snapshots(path) == [0, 1]
+    assert T.expire_snapshots(path, keep_last=1) == [0]
+
+
+def test_commit_stamps_past_the_highest_snapshot(tmp_path, monkeypatch):
+    """_commit reads the previous commit stamp from the highest snapshot
+    id alone. Pinned: with a clock that stands still, after expiry and
+    after a rollback plus a forked commit, the highest id still holds
+    the largest stamp and stamps rise with the id; and the manifest
+    loads per _commit are the same at commit 10 and at commit 60."""
+    import time
+
+    path = str(tmp_path / "t")
+    monkeypatch.setattr(time, "time", lambda: 1_000.0)
+    loads = []
+    real_load = T._load_manifest
+
+    def counting(p, sid):
+        loads.append(sid)
+        return real_load(p, sid)
+
+    def commit():
+        cur = T.current_snapshot(path)
+        base = None if cur is None else real_load(path, cur)
+        loads.clear()
+        monkeypatch.setattr(T, "_load_manifest", counting)
+        T._commit(path, [], base, cur, None)
+        monkeypatch.setattr(T, "_load_manifest", real_load)
+        return len(loads)
+
+    def assert_stamps_rise():
+        sids = T.list_snapshots(path)
+        stamps = [real_load(path, s)["committed_at_us"] for s in sids]
+        assert stamps == sorted(set(stamps))
+        assert max(stamps) == stamps[-1]
+
+    per_commit = [commit() for _ in range(60)]
+    assert per_commit[9] == per_commit[59] == 1
+    T.expire_snapshots(path, keep_last=3)
+    commit()
+    assert_stamps_rise()
+    T.snapshot_rollback(path, T.list_snapshots(path)[0])
+    commit()
+    assert_stamps_rise()

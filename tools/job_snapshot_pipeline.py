@@ -20,8 +20,9 @@ The commit protocol is the operational story —
        partitions are carried into the new manifest BY FILE REFERENCE
        (zero read, zero write); the commit_id is a fingerprint of the
        batch files, so a re-run of a crashed/duplicated job finds its
-       manifest and just repoints — exactly-once per batch, no
-       sentinel files, no cleanup scripts,
+       manifest and moves the table only by fast-forward (the first
+       run's in-line compaction stays current) — exactly-once per
+       batch, no sentinel files, no cleanup scripts,
     3. maintenance in-line: bin-pack fragmented partitions
        (self-stabilizing small-file guard) and expire all but the
        newest --keep-snapshots manifests, vacuuming unreferenced files
@@ -70,8 +71,8 @@ def main() -> None:
                     help="snapshot-table path (created on first run, "
                          "committed into afterwards)")
     ap.add_argument("--keep-snapshots", type=int, default=3,
-                    help="manifests retained by expiry (current always "
-                         "survives)")
+                    help="manifests retained by expiry, at least 1 "
+                         "(current always survives)")
     ap.add_argument("--target-file-bytes", type=int,
                     default=128 * 1024 * 1024,
                     help="compaction bin size")
